@@ -24,7 +24,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 import __spark_entry__ as entrymod  # noqa: E402
 from jmdfane_spark import persist  # noqa: E402
 from jmdfane_spark.plans.pipeline import run_pipeline  # noqa: E402
-from jmdfane_spark.session import get_spark  # noqa: E402
+from jmdfane_spark.session import default_cpus, get_spark  # noqa: E402
 from jmdfane_spark.sources.tables import documents_as_files  # noqa: E402
 
 HEADLINE = [
@@ -50,7 +50,7 @@ def _steal(c0: list[int], c1: list[int]) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     spark = get_spark(master=f"local[{cpus}]", app_name="jmdfane-bench-extra")
 

@@ -6,8 +6,6 @@ Reference semantics re-expressed with built-ins:
   * Levenshtein ratio — src/pre_data/generate_adj.py:70-71 (F5)
   * cosine over dense embedding arrays — src/local_embedding/
     local_embedding.py:296 etc. (F6), here F.aggregate/zip_with array math
-  * common-coauthor count rule — generate_adj.py:106-109 (here: common
-    token count between auxiliary arrays)
 
 All functions return DoubleType columns and are null-safe (empty arrays →
 0.0), so they can sit directly in the pair-scoring select list.
@@ -40,11 +38,6 @@ def jaccard_sets(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = (F.size(a) + F.size(b)).cast("double") - inter
     return F.when(union > 0, F.round(inter / union, 9)).otherwise(F.lit(0.0))
-
-
-def common_count(a: Column, b: Column) -> Column:
-    """|a∩b| — the reference's coauthor rule input (generate_adj.py:106)."""
-    return F.size(F.array_intersect(a, b)).cast("double")
 
 
 def tanimoto(a: Column, b: Column) -> Column:
@@ -123,13 +116,6 @@ def char_bag_distance(a: Column, b: Column) -> Column:
             F.size(F.filter(ca, lambda x: x == ch)) - F.size(F.filter(cb, lambda x: x == ch))
         ),
     )
-
-
-def containment(a: Column, b: Column) -> Column:
-    """|a∩b| / min(|a|,|b|) — robust to size-skewed near-dups."""
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    mn = F.least(F.size(a), F.size(b)).cast("double")
-    return F.when(mn > 0, inter / mn).otherwise(F.lit(0.0))
 
 
 def _jaro_winkler_batch(a_vals: list, b_vals: list) -> np.ndarray:

@@ -53,11 +53,6 @@ def tokenize(col: Column, min_len: int = 2, drop_stopwords: bool = True) -> Colu
     return toks
 
 
-def token_set(col: Column, **kw) -> Column:
-    """Distinct, sorted token array — set semantics for Jaccard (A4)."""
-    return F.array_sort(F.array_distinct(tokenize(col, **kw)))
-
-
 def path_stem(path: Column) -> Column:
     """Normalized file-name stem used as part of the blocking key.
 
@@ -73,16 +68,6 @@ def path_stem(path: Column) -> Column:
     # `foo2`, `foo_v2`, `foo2_copy` normalize identically
     stem = F.regexp_replace(stem, "(copy|final|new|old|backup|bak|v[0-9]+|[0-9]+)+$", "")
     return stem
-
-
-def char_ngrams(col: Column, n: int = 5) -> Column:
-    """Character n-gram shingle set of the normalized text (for MinHash).
-
-    JVM-side: substring over a generated index sequence — no Python.
-    """
-    s = F.regexp_replace(normalize_text(col), " ", "_")
-    idx = F.sequence(F.lit(1), F.greatest(F.length(s) - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: s.substr(i, F.lit(n))))
 
 
 def hashed_word_ngrams(hashed_tokens: Column, n: int = 3) -> Column:
@@ -137,59 +122,6 @@ def word_ngrams(tokens: Column, n: int = 3) -> Column:
 # ---------------------------------------------------------------------------
 # Training-data-pipeline text analyses (documents table)
 # ---------------------------------------------------------------------------
-
-_LANG_MARKERS = {
-    # (language, marker words) — tiny deterministic heuristic; each marker
-    # list is checked as whole-word membership in the token array.
-    "en": ("the", "and", "of", "is"),
-    "de": ("der", "die", "und", "ist"),
-    "fr": ("le", "la", "et", "est"),
-    "es": ("el", "los", "que", "es"),
-}
-
-
-def lang_id(text: Column) -> Column:
-    """Marker-word language guess; 'unknown' when nothing matches.
-
-    Ties broken by fixed language order (en, de, fr, es) — deterministic
-    and oracle-expressible as CASE WHEN chains.
-    """
-    toks = F.split(normalize_text(text), " ")
-    scores = [
-        (lang, sum((F.array_contains(toks, w).cast("int") for w in words), F.lit(0)))
-        for lang, words in _LANG_MARKERS.items()
-    ]
-    best = F.greatest(*[s for _, s in scores])
-    expr = F.lit("unknown")
-    for lang, s in reversed(scores):
-        expr = F.when((s == best) & (best > 0), F.lit(lang)).otherwise(expr)
-    return expr
-
-
-def token_count(text: Column) -> Column:
-    """Whitespace-ish token count (BPE-ish proxy: alnum runs)."""
-    t = normalize_text(text)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, " ")))
-
-
-def quality_score(text: Column) -> Column:
-    """[0,1] doc-quality heuristic: length band + alnum ratio + stopword hit.
-
-    Components (each 0..1, averaged):
-      len_ok    — 1 if 20 ≤ n_chars ≤ 10000 else 0
-      alnum     — fraction of chars that are [a-zA-Z0-9 ]
-      stopw     — 1 if any top-stopword appears (fluent-text signal)
-    """
-    n = F.length(text)
-    len_ok = ((n >= 20) & (n <= 10000)).cast("double")
-    alnum = (
-        F.length(F.regexp_replace(text, "[^a-zA-Z0-9 ]", "")).cast("double")
-        / F.greatest(n, F.lit(1)).cast("double")
-    )
-    toks = F.split(normalize_text(text), " ")
-    stopw = F.arrays_overlap(toks, F.array(*[F.lit(s) for s in ("the", "and", "of", "is", "to")])).cast("double")
-    return F.round((len_ok + alnum + stopw) / 3.0, 6)
-
 
 def fingerprint(text: Column) -> Column:
     """Deterministic rolling-hash document fingerprint (bigint).

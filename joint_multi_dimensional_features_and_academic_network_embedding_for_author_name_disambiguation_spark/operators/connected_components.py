@@ -9,10 +9,11 @@ distributed equivalent (north_rule stage 3) is the hash-min fixpoint:
     label(v) ← min(label(v), min over neighbours u of label(u))
 
 repeated until no label changes. Each iteration is one join + one
-min-aggregate; lineage is cut every iteration via localCheckpoint (or a
-parquet checkpoint dir for kill-resumability), and a per-iteration metrics
-row (labels changed, components remaining) is collected — the north_rule's
-"components merged per iteration" lineage metric.
+min-aggregate; lineage is cut every iteration by a snapshot — a parquet
+checkpoint when a CheckpointManager is given (kill-resumable), a
+localCheckpoint otherwise — and a per-iteration metrics row (labels
+changed) is collected: the north_rule's "components merged per iteration"
+lineage metric.
 
 Labels are the row-id strings themselves (min = lexicographic), so the
 final component id is the smallest member id — deterministic, collision-free,
@@ -22,7 +23,6 @@ and directly joinable back to the labels table.
 from __future__ import annotations
 
 import time as _time
-import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -30,149 +30,135 @@ from pyspark.sql import functions as F
 
 from .. import persist as _persist
 
+# When |V| ≤ this bound, every edge×label join hash-broadcasts the label
+# side. Both sides are snapshots (LogicalRDD / parquet re-reads) whose
+# Catalyst size estimate is useless, so without the explicit hint every
+# round degrades to a SortMergeJoin that sorts the 2|E| edge stream
+# (measured: a 23k-row label table still sort-merged against 29M edges).
+# Above the bound the shuffle join is the honest plan.
+BROADCAST_MAX_VERTICES = 4_000_000
+# Pointer-jumping applications composed (lazily) into each round: k jumps
+# shrink the remaining label-chain distance 2^k× per round for k−1 extra
+# |V|-sized joins folded into the round's single materialization.
+JUMPS_PER_ROUND = 2
+
 
 @dataclass
 class CCResult:
     labels: DataFrame          # (id, component)
     iterations: int
     metrics: list[dict] = field(default_factory=list)  # per-iteration rows
-    converged: bool = True     # False ⇒ labels are NOT a fixpoint (diameter > max_iter)
-    persists: list = field(default_factory=list)  # checkpoints still backing `labels`
-    # (superseded per-iteration localCheckpoints are freed DURING the run;
-    # the final one — and the contraction base — must outlive `labels`, so
-    # they are handed to the caller to unpersist after materializing)
+    persists: list = field(default_factory=list)  # snapshots still backing `labels`
+    # (superseded snapshots are freed DURING the run; the final one — and
+    # the contraction base — must outlive `labels`, so they are handed to
+    # the caller to unpersist after materializing)
+
+
+def _symmetrize(df: DataFrame, s: str, d: str) -> DataFrame:
+    # one pass over the input via explode (a two-branch union scans the
+    # upstream twice); no distinct(): hash-min's min-aggregate is
+    # idempotent to duplicate edges, and a distinct is a full extra
+    # shuffle of 2|E| rows
+    return df.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(s).alias("src"), F.col(d).alias("dst")),
+                F.struct(F.col(d).alias("src"), F.col(s).alias("dst")),
+            )
+        ).alias("_e")
+    ).select("_e.src", "_e.dst")
+
+
+def _identity(sym: DataFrame) -> DataFrame:
+    # sym holds both directions: src covers every vertex of the graph
+    return sym.select(F.col("src").alias("id")).distinct().select(
+        "id", F.col("id").alias("component")
+    )
 
 
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 25,
     checkpointer=None,
-    count_components: bool = False,
-    contract_after: int = 1,
-    broadcast_max_vertices: int = 4_000_000,
     n_vertices: int | None = None,
-    jumps_per_iter: int = 2,
     contract_min_changed: int = 100_000,
 ) -> CCResult:
-    """Hash-min CC over an undirected edge table.
+    """Hash-min CC over an undirected (id_a, id_b) edge table, run to its
+    fixpoint.
 
     vertices: one row per id (isolated vertices become singletons).
     edges: unordered pairs; symmetrized internally.
     checkpointer: optional plans.checkpoint.CheckpointManager — when given,
-    each iteration's label table is persisted (resume = continue from the
-    last completed iteration).
-    contract_after: after this many hash-min iterations the edge table is
-    CONTRACTED to the distinct component graph — {(label(u), label(v)):
-    label(u) ≠ label(v)} — and the fixpoint continues on that (usually
-    tiny) graph, with final labels composed through the contraction map.
-    On dense similarity graphs one iteration collapses most clusters, so
-    this turns every later iteration's 2|E|-row join into a near-empty
-    one (the same idea as the large-star/small-star contraction family).
-    0 disables. Contraction is skipped in checkpointed mode so every
-    written iteration keeps original-vertex labels for resume.
-    broadcast_max_vertices: when |V| ≤ this bound, every edge×label join
-    hash-broadcasts the label side. Both tables here are localCheckpointed
-    (LogicalRDD), whose Catalyst size estimate is defaultSizeInBytes —
-    effectively infinite — so without the explicit hint every hash-min
-    iteration and the contraction degrade to SortMergeJoin, sorting the
-    2|E| edge stream per pass (measured: the label table was 23k rows vs
-    a 29M-row edge table and still sort-merged). |V| is counted once from
-    the cached vertex table (one columnar job); above the bound the
-    shuffle join is the honest plan — at 10^12 vertices a label table
-    does not fit in an executor, and partial aggregation already bounds
-    the min-message shuffle at |V| rows per map partition. 0 disables.
+    every snapshot is a committed parquet stage and a rerun over the same
+    directory resumes from the newest committed iteration.
     n_vertices: pass |V| when the caller already knows it (the pipeline
     counts members once) — skips the broadcast gate's count job.
-    jumps_per_iter: pointer-jumping applications composed (lazily) into
-    each materialized round — k jumps shrink the remaining label-chain
-    distance 2^k× per round, so chain-like graphs converge in fewer
-    synchronization rounds for the price of k−1 extra |V|-sized label
-    joins folded into the round's single materialization (never
-    |E|-sized work).
-    """
-    # no distinct(): hash-min's min-aggregate is idempotent to duplicate
-    # edges, and for unique unordered input pairs the swapped union has no
-    # duplicates anyway — a distinct here is a full extra shuffle of 2|E|
-    # rows for nothing (measured ~100s of task time on the 14.5M-pair
-    # scaling workload). Symmetrize with ONE pass over the input via
-    # explode — the r5 two-branch union scanned the upstream (here: the
-    # whole scored-pairs cache) twice to materialize sym.
-    def _symmetrize(df: DataFrame, s: str, d: str) -> DataFrame:
-        return df.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(s).alias("src"), F.col(d).alias("dst")),
-                    F.struct(F.col(d).alias("src"), F.col(s).alias("dst")),
-                )
-            ).alias("_e")
-        ).select("_e.src", "_e.dst")
+    contract_min_changed: when a round changes at least this many labels,
+    the edge table is CONTRACTED to the distinct component graph
+    {(label(u), label(v)): label(u) ≠ label(v)} and the fixpoint continues
+    on that (usually tiny) graph, with final labels composed through the
+    contraction map — every later round's 2|E|-row join becomes a
+    near-empty one. Below ~10^5 moving labels the remaining broadcast
+    rounds cost no more than the contraction pass itself; 0 forces
+    contraction after the first round that changes anything.
 
-    start_iter = 0
-    labels = None
-    base_labels = None  # set when the graph is contracted: (id, comp1)
-    lab_prefix = "cc_labels"
-    identity_labels = False  # True ⇒ label(v) == v, so the first hash-min
-    # pass needs no edge×label join: min over neighbours of label(u) is
-    # just min(src) per dst — one agg over the cached edge table instead
-    # of a join pass over 2|E| rows
+    The loop ends when a round changes no label. It terminates: every
+    other round lowers at least one label in a finite ordered set, and
+    pointer jumping makes the round count O(log diameter).
+    """
+
+    def _snapshot(name: str, df: DataFrame, eager: bool = False) -> DataFrame:
+        # cut lineage: a committed parquet stage when resumable, else a
+        # localCheckpoint that the first action reading it materializes
+        if checkpointer is not None:
+            return checkpointer.write(name, df)
+        return df.localCheckpoint(eager=eager)
+
     # Resume INTO the quotient phase when both contraction snapshots are
     # committed (qedges is written before base_labels, so base committed
-    # ⇒ both valid): the original edge table is never touched again —
-    # the resumable 100 TB configuration no longer pays the 2|E| join
-    # per iteration that contraction eliminates (r5 VERDICT item 3).
-    resume_quotient = (
-        checkpointer is not None
-        and checkpointer.exists("cc_base_labels")
-        and checkpointer.exists("cc_qedges")
-    )
-    if resume_quotient:
-        base_labels = checkpointer.read("cc_base_labels")
-        sym = _symmetrize(checkpointer.read("cc_qedges"), "src", "dst")
-        lab_prefix = "cc_qlabels"
-        labels, start_iter = checkpointer.latest_iteration(lab_prefix)
+    # ⇒ both valid): the original edge table is never touched again.
+    labels = base_labels = qedges = None
+    prefix, start_iter = "cc_labels", 0
+    if checkpointer is not None:
+        if checkpointer.exists("cc_base_labels") and checkpointer.exists("cc_qedges"):
+            base_labels = checkpointer.read("cc_base_labels")
+            qedges = checkpointer.read("cc_qedges")
+            prefix = "cc_qlabels"
+        labels, start_iter = checkpointer.latest_iteration(prefix)
+    if qedges is None:
+        sym = _symmetrize(edges, "id_a", "id_b").persist()
     else:
-        sym = _symmetrize(edges, src_col, dst_col)
-        if checkpointer is not None:
-            labels, start_iter = checkpointer.latest_iteration(lab_prefix)
-    sym.persist()
-    prev_ckpt = None   # the checkpoint currently backing `labels` (freed when superseded)
-    keep_ckpts: list = []  # checkpoints base_labels still reads (freed by the caller)
-    if labels is None and resume_quotient:
-        # killed right after contracting: restart the quotient fixpoint
-        # from identity labels over the (parquet-backed) quotient edges
-        labels = (
-            sym.select(F.col("src").alias("id"))
-            .distinct()
-            .select("id", F.col("id").alias("component"))
-        )
-        identity_labels = True
-    elif labels is None:
-        labels = vertices.select(F.col(id_col).alias("id"), F.col(id_col).alias("component"))
-        # lazy: nothing reads the identity labels until the first
-        # non-shortcut join — no point paying an eager materialization job
-        labels = labels.localCheckpoint(eager=False)
-        prev_ckpt = labels
-        identity_labels = True
+        sym = _symmetrize(qedges, "src", "dst").persist()
 
-    # |V| gate for broadcasting the label side of every edge×label join —
-    # caller-supplied count when known, else one columnar count job
-    small_v = False
-    if broadcast_max_vertices:
-        if n_vertices is None:
-            n_vertices = labels.count()
-        small_v = n_vertices <= broadcast_max_vertices
+    # identity labels (label(v) == v) make the first round's messages
+    # just min(src) per dst — one agg over the cached edge table, no
+    # edge×label join
+    identity_labels = labels is None
+    snap = None  # the snapshot backing `labels`, freed once superseded
+    if labels is None and base_labels is not None:
+        # killed right after contracting: restart the quotient fixpoint
+        labels = _identity(sym)
+    elif labels is None:
+        # lazy: the broadcast gate's count (or round 1) materializes it
+        labels = snap = vertices.select(
+            F.col(id_col).alias("id"), F.col(id_col).alias("component")
+        ).localCheckpoint(eager=False)
+
+    if n_vertices is None:
+        n_vertices = labels.count()
+    small_v = n_vertices <= BROADCAST_MAX_VERTICES
 
     def _b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small_v else df
 
+    changed_agg = F.coalesce(
+        F.sum(F.coalesce(F.col("_changed").cast("long"), F.lit(0))), F.lit(0)
+    ).alias("n")
     metrics: list[dict] = []
-    stale_sym = None  # pre-contraction sym, freed once the quotient materializes
     it = start_iter
-    for it in range(start_iter + 1, max_iter + 1):
+    while True:
+        it += 1
         _it_t0 = _time.time()
         # candidate labels flowing along edges
         if identity_labels:
@@ -186,122 +172,48 @@ def connected_components(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("component").alias("nbr_component"))
             )
-        new_labels = (
-            labels.join(_b(msgs), "id", "left")
-            .select(
-                "id",
-                F.least(F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))).alias(
-                    "component"
-                ),
-                (F.col("nbr_component") < F.col("component")).alias("_changed"),
-            )
+        new_labels = labels.join(_b(msgs), "id", "left").select(
+            "id",
+            F.least(
+                F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
+            ).alias("component"),
+            (F.col("nbr_component") < F.col("component")).alias("_changed"),
         )
-        # Materialize ONCE, then read the convergence count from the
-        # materialized partitions: running the `changed` agg on the lazy
-        # plan and then checkpointing executed the whole join pipeline
-        # TWICE per iteration (measured ~2× the CC stage cost — CC was
-        # ~40s at 8 and 16 cores alike, pure overhead).
-        changed_agg = F.coalesce(
-            F.sum(F.coalesce(F.col("_changed").cast("long"), F.lit(0))), F.lit(0)
-        ).alias("n")
-        if checkpointer is not None:
-            flagged = new_labels.persist()
-            changed = flagged.agg(changed_agg).collect()[0]["n"]
-            labels = checkpointer.write_iteration(lab_prefix, it, flagged.drop("_changed"))
-            flagged.unpersist()
-            if prev_ckpt is not None:  # parquet now backs labels
-                _persist.unpersist_any(prev_ckpt)
-                prev_ckpt = None
-        else:
-            # lazy checkpoint: the convergence agg below is the action
-            # that materializes it — one job per iteration instead of the
-            # r5 eager-checkpoint-then-agg two (lineage is cut identically)
-            flagged = new_labels.localCheckpoint(eager=False)
-            changed = flagged.agg(changed_agg).collect()[0]["n"]
-            if stale_sym is not None:
-                # the contracted quotient is materialized now — the
-                # original edge persist is dead weight
-                _persist.unpersist_any(stale_sym)
-                stale_sym = None
-            labels = flagged.drop("_changed")
-            # the agg above materialized `flagged`, so the checkpoint it
-            # was computed FROM is dead weight — free it now instead of
-            # accumulating one cached label table per iteration
-            if prev_ckpt is not None:
-                _persist.unpersist_any(prev_ckpt)
-            prev_ckpt = flagged
-        row = {
+        # snapshot ONCE, then read the convergence count from it: in
+        # memory the lazy localCheckpoint is materialized by this agg, so
+        # a round is one Spark job (counting on the lazy plan and then
+        # checkpointing executed the whole join pipeline twice)
+        flagged = _snapshot(f"{prefix}_{it:04d}", new_labels)
+        changed = flagged.agg(changed_agg).collect()[0]["n"]
+        if snap is not None:  # `flagged` no longer reads it
+            _persist.unpersist_any(snap)
+        snap = flagged
+        labels = flagged.drop("_changed")
+        metrics.append({
             "iteration": it,
             "labels_changed": int(changed),
             "wall_sec": round(_time.time() - _it_t0, 3),
             "phase": "quotient" if base_labels is not None else "full",
-        }
-        if count_components:
-            # optional: a full extra job per iteration — only for lineage
-            # metrics, never needed for convergence. After contraction the
-            # live label table is quotient-graph-scoped, which would
-            # UNDERCOUNT (components already converged to quotient
-            # singletons vanish) — compose through base_labels so the
-            # metric always counts original-vertex components.
-            if base_labels is not None:
-                composed = (
-                    base_labels.withColumnRenamed("component", "_c1")
-                    .join(
-                        _b(
-                            labels.select(
-                                F.col("id").alias("_c1"), F.col("component").alias("_cf")
-                            )
-                        ),
-                        "_c1",
-                        "left",
-                    )
-                    .select(F.coalesce(F.col("_cf"), F.col("_c1")).alias("component"))
-                )
-                row["components"] = int(composed.distinct().count())
-            else:
-                row["components"] = int(labels.select("component").distinct().count())
-        metrics.append(row)
+        })
         if changed == 0:
             break
-        # pointer jumping: component ← label(component). A |V|-sized join
-        # that halves the remaining distance to the component minimum;
-        # COMPOSED jumps_per_iter times lazily (each jump's map derives
-        # from the previous jump's output), so one materialized round
-        # shrinks chains 2^k× — O(log d / k) synchronization rounds on
-        # chain-like graphs. Identity at the fixpoint (labels constant
-        # per component), so the edge-based convergence test is untouched.
-        for _ in range(max(1, jumps_per_iter)):
+        # pointer jumping: component ← label(component). Identity at the
+        # fixpoint (labels constant per component), so the edge-based
+        # convergence test is untouched.
+        for _ in range(JUMPS_PER_ROUND):
             jmap = labels.select(
                 F.col("id").alias("component"), F.col("component").alias("_c2")
             )
             labels = labels.join(_b(jmap), "component", "left").select(
                 "id", F.coalesce(F.col("_c2"), F.col("component")).alias("component")
             )
-        if (
-            contract_after
-            and base_labels is None
-            and it - start_iter >= contract_after
-            and changed >= contract_min_changed
-        ):
-            # contract_min_changed is a DATA-derived gate, not a core-count
-            # tune: with fewer than ~10^5 labels still moving, the live
-            # frontier is so small that the remaining label-broadcast
-            # rounds cost no more than the contraction pass itself (one
-            # full scan of 2|E| through two joins plus ~5 scheduling
-            # jobs) — contraction would be pure overhead. At fact scale
-            # the first iteration moves billions of labels and the gate
-            # always fires.
-            # contract: continue the fixpoint on the distinct component
-            # graph instead of re-joining all 2|E| original edges each
-            # iteration; connectivity (and the min-id fixpoint) is
-            # preserved, labels compose at the end
+        if base_labels is None and changed >= contract_min_changed:
+            # contract ONE direction of each edge (src < dst) — half the
+            # rows through both label joins and the distinct — then
+            # re-symmetrize. connectivity (and the min-id fixpoint) is
+            # preserved; labels compose at the end.
             lab_src = labels.select(F.col("id").alias("src"), F.col("component").alias("_ls"))
             lab_dst = labels.select(F.col("id").alias("dst"), F.col("component").alias("_ld"))
-            # contract ONE direction of each edge (src < dst) — half the
-            # rows through both label joins and the distinct — normalize
-            # to canonical orientation, dedupe, then re-symmetrize with a
-            # single explode pass (r5 pushed all 2|E| rows through the
-            # joins and deduped both orientations separately)
             canon = (
                 sym.where(F.col("src") < F.col("dst"))
                 .join(_b(lab_src), "src")
@@ -313,96 +225,40 @@ def connected_components(
                 )
                 .distinct()
             )
-            if checkpointer is not None:
-                # snapshot the quotient phase: edges FIRST, base map
-                # LAST — resume enters the phase only when base_labels
-                # is committed, so a crash between the writes replays
-                # the contraction instead of composing a stale map.
-                # From here on, resumable runs never touch the original
-                # 2|E| edge table again.
-                canon = checkpointer.write("cc_qedges", canon)
-                base_labels = checkpointer.write("cc_base_labels", labels)
-                _persist.unpersist_any(sym)  # parquet now holds the quotient
-                sym = _symmetrize(canon, "src", "dst")
-                sym.persist()
-                labels = (
-                    sym.select(F.col("src").alias("id"))
-                    .distinct()
-                    .select("id", F.col("id").alias("component"))
-                )
-                lab_prefix = "cc_qlabels"
-            else:
-                base_labels = labels
-                if prev_ckpt is not None:
-                    # base_labels' (lazy) lineage reads this checkpoint
-                    # until the final composition — the CALLER frees it
-                    # via CCResult.persists after materializing
-                    keep_ckpts.append(prev_ckpt)
-                    prev_ckpt = None
-                contracted = (
-                    canon.select(
-                        F.explode(
-                            F.array(
-                                F.struct(F.col("src"), F.col("dst")),
-                                F.struct(
-                                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                                ),
-                            )
-                        ).alias("_e")
-                    )
-                    .select("_e.src", "_e.dst")
-                    .localCheckpoint(eager=False)
-                )
-                # the lazy quotient still READS the old sym until its
-                # first materialization (next iteration's convergence
-                # action) — freeing it now would silently recompute the
-                # full edge scan
-                stale_sym = sym
-                sym = contracted
-                labels = (
-                    sym.select(F.col("src").alias("id"))
-                    .distinct()  # sym holds both directions: src covers every quotient vertex
-                    .select("id", F.col("id").alias("component"))
-                    .localCheckpoint(eager=False)
-                )
-                prev_ckpt = labels
-            identity_labels = True  # quotient labels start as identity too
+            # edges FIRST, base map LAST — resume enters the quotient phase
+            # only when base_labels is committed, so a crash between the
+            # writes replays the contraction instead of composing a stale
+            # map. Both are eager, so nothing reads `sym` or `snap` again.
+            qedges = _snapshot("cc_qedges", canon, eager=True)
+            base_labels = _snapshot("cc_base_labels", labels, eager=True)
+            _persist.unpersist_any(sym)
+            _persist.unpersist_any(snap)
+            snap = None
+            sym = _symmetrize(qedges, "src", "dst").persist()
+            labels = _identity(sym)
+            prefix = "cc_qlabels"
+            identity_labels = True
             # the quotient vertex set is usually orders of magnitude
-            # smaller than the original — re-evaluate the broadcast gate
-            # so a too-big-to-broadcast input still gets broadcast
-            # iterations on the contracted graph
-            if broadcast_max_vertices and not small_v:
-                small_v = labels.count() <= broadcast_max_vertices
+            # smaller — re-evaluate the broadcast gate on it
+            if not small_v:
+                small_v = labels.count() <= BROADCAST_MAX_VERTICES
 
-    if stale_sym is not None:  # loop exhausted max_iter right after contracting
-        _persist.unpersist_any(stale_sym)
-    _persist.unpersist_any(sym)  # post-contraction sym is a localCheckpoint
+    _persist.unpersist_any(sym)
+    persists = [snap]
     if base_labels is not None:
+        _persist.unpersist_any(qedges)  # only sym read it
         # compose: original id → comp1 → final component. Components whose
-        # comp1 label never appeared in the contracted graph (already
-        # converged clusters / singletons) keep comp1.
+        # comp1 label never appeared in the contracted graph (clusters
+        # already settled before contracting, singletons) keep comp1.
         final_map = labels.select(F.col("id").alias("_c1"), F.col("component").alias("_cf"))
         labels = (
             base_labels.withColumnRenamed("component", "_c1")
             .join(_b(final_map), "_c1", "left")
             .select("id", F.coalesce(F.col("_cf"), F.col("_c1")).alias("component"))
         )
-    converged = (not metrics) or metrics[-1]["labels_changed"] == 0
-    if not converged:
-        # a component with graph diameter > max_iter would silently get
-        # wrong ids — never return that as if it were a fixpoint
-        warnings.warn(
-            f"connected_components did not converge in {max_iter} iterations "
-            f"({metrics[-1]['labels_changed']} labels still changing); "
-            "labels are NOT transitive-closure-complete",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    persists = keep_ckpts + ([prev_ckpt] if prev_ckpt is not None else [])
+        persists.append(base_labels)
     # also in the process-wide registry so standalone callers (driver
     # queries, benches) can bulk-release; double-unpersist is a no-op
     for _df in persists:
         _persist.register(_df)
-    return CCResult(
-        labels=labels, iterations=it, metrics=metrics, converged=converged, persists=persists
-    )
+    return CCResult(labels=labels, iterations=it, metrics=metrics, persists=persists)

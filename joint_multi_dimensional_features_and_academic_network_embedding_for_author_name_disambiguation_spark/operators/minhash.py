@@ -138,30 +138,6 @@ def minhash_signature(tokens: Column, num_hashes: int = 64) -> Column:
     )
 
 
-def band_key_array(
-    tokens: Column, bands: int, rows: int, prefix: Column | None = None
-) -> Column:
-    """All band keys as ONE array<string> expression.
-
-    Critical at plan level: the (large) signature subtree appears exactly
-    once — deriving per-band columns instead lets projection collapse
-    clone the 64-hash tree into every band column, exploding codegen.
-    Pair generation explodes this array into skinny (id, block_key) rows.
-    """
-    sig = minhash_signature(tokens, bands * rows)
-
-    def mk(i: Column) -> Column:
-        h = F.xxhash64(
-            F.concat_ws(",", F.transform(F.slice(sig, i * rows + 1, rows), lambda x: x.cast("string")))
-        )
-        parts = [i.cast("string"), h.cast("string")]
-        if prefix is not None:
-            parts = [prefix] + parts
-        return F.concat_ws("|", *parts)
-
-    return F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), mk)
-
-
 def banded_keys(
     df: DataFrame,
     id_col: str,
@@ -238,42 +214,6 @@ def banded_keys(
         F.col("_bh").cast("string"),
     ]
     return agg.select(F.col(id_col), F.concat_ws("|", *parts).alias("block_key"))
-
-
-def band_keys(sig: Column, bands: int, rows: int, prefix: Column | None = None) -> list[Column]:
-    """One hashed key per band; pairs agreeing on ≥1 band are candidates.
-
-    With b bands of r rows, P(candidate) = 1-(1-s^r)^b for Jaccard s —
-    b=16,r=4 puts the S-curve threshold near s≈0.5.
-    """
-    keys = []
-    for i in range(bands):
-        chunk = F.slice(sig, i * rows + 1, rows)
-        k = F.xxhash64(F.lit(i), F.concat_ws(",", F.transform(chunk, lambda x: x.cast("string"))))
-        if prefix is not None:
-            k = F.concat_ws("|", prefix, F.lit(str(i)), k.cast("string"))
-        else:
-            k = F.concat_ws("|", F.lit(str(i)), k.cast("string"))
-        keys.append(k)
-    return keys
-
-
-def with_band_columns(
-    df: DataFrame,
-    tokens_col: str,
-    bands: int = 16,
-    rows: int = 4,
-    prefix_col: str | None = None,
-    out_prefix: str = "band_",
-) -> DataFrame:
-    """Attach band_0..band_{b-1} string key columns (composite with prefix,
-    e.g. lang, so banding never crosses a language boundary)."""
-    sig = minhash_signature(F.col(tokens_col), bands * rows)
-    df = df.withColumn("_sig", sig)
-    prefix = F.col(prefix_col) if prefix_col else None
-    for i, k in enumerate(band_keys(F.col("_sig"), bands, rows, prefix)):
-        df = df.withColumn(f"{out_prefix}{i}", k)
-    return df.drop("_sig")
 
 
 def simhash64(tokens: Column) -> Column:

@@ -16,14 +16,12 @@ Channels over the files table:
   path_sim        — Levenshtein ratio on normalized paths (F5, built-in)
   tfidf_cosine    — hashed TF-IDF cosine
 
-Two TF-IDF implementations with identical semantics (measured at sf0.1,
-3.2M pairs, local[32]):
-  * JVM (default): sorted-idx array_intersect + map<long,float> lookups +
-    precomputed norms — no Arrow hop (~3× faster end-to-end);
-  * Arrow pandas UDF: per batch, densify hashed sparse vectors with ONE
-    np.bincount per side and one einsum — zero per-row Python (the
-    north_rule stage-2 shape, kept as the extension point for channels
-    that genuinely need Python, e.g. learned embedding models).
+The TF-IDF channel is scored by ``tfidf_cosine_jvm`` (one hash-merged
+map_zip_with pass over (map, norm), no Arrow hop). ``tfidf_cosine_udf``
+computes the same cosine over the (idx, val) arrays with numpy; it is
+not on the scoring path and is kept as the Arrow twin that the
+benchmark's kernel lane times against the JVM kernel (~3× slower
+end-to-end at sf0.1, 3.2M pairs, local[32]).
 """
 
 from __future__ import annotations
@@ -177,7 +175,6 @@ def tfidf_cosine_udf(
 def score_pairs(
     pairs: DataFrame,
     weights: dict[str, float] | None = None,
-    tfidf_impl: str = "jvm",
     prune_below: float | None = None,
     path_sim_impl: str = "lev",
 ) -> DataFrame:
@@ -207,13 +204,7 @@ def score_pairs(
     metric, Arrow-batched; see functions.similarity.jaro_winkler).
     """
     w = dict(weights or CHANNEL_WEIGHTS)
-    # either sparse representation carries the channel: (map, norm) for the
-    # JVM map_zip_with kernel, (idx, val) for the Arrow bincount kernel —
-    # the pipeline ships only the one its tfidf_impl reads (the other is
-    # redundant bytes through the pair broadcast/shuffle)
-    has_tfidf_map = "tfidf_map_a" in pairs.columns
-    has_tfidf_arr = "tfidf_idx_a" in pairs.columns
-    has_tfidf = has_tfidf_map or has_tfidf_arr
+    has_tfidf = "tfidf_map_a" in pairs.columns
     has_emb = "emb_cosine" in w
     # tokens/shingles arrive deduplicated from normalize_files/word_ngrams
     # → the set-specialized Jaccard (no array_union build) is exact here
@@ -249,15 +240,10 @@ def score_pairs(
         # degenerate single-channel config — floor the denominator
         oov_denom = max(1.0 - w["emb_cosine"], 1e-9)
     if has_tfidf:
-        if has_tfidf_map and (tfidf_impl == "jvm" or not has_tfidf_arr):
-            tfidf_expr = tfidf_cosine_jvm(
-                F.col("tfidf_map_a"), F.col("tfidf_norm_a"),
-                F.col("tfidf_map_b"), F.col("tfidf_norm_b"),
-            )
-        else:
-            tfidf_expr = tfidf_cosine_udf(
-                F.col("tfidf_idx_a"), F.col("tfidf_val_a"), F.col("tfidf_idx_b"), F.col("tfidf_val_b")
-            )
+        tfidf_expr = tfidf_cosine_jvm(
+            F.col("tfidf_map_a"), F.col("tfidf_norm_a"),
+            F.col("tfidf_map_b"), F.col("tfidf_norm_b"),
+        )
     else:
         tfidf_expr = F.col("token_jaccard")
 

@@ -66,6 +66,3 @@ def release() -> int:
     _LIVE.clear()
     return n
 
-
-def live_count() -> int:
-    return len(_LIVE)

@@ -64,9 +64,6 @@ class CheckpointManager:
         return self.write(name, fn(), partition_by)
 
     # -- iteration snapshots (CC fixpoint) -----------------------------------
-    def write_iteration(self, prefix: str, it: int, df: DataFrame) -> DataFrame:
-        return self.write(f"{prefix}_{it:04d}", df)
-
     def latest_iteration(self, prefix: str):
         """(df, iteration) of the newest committed iteration, or (None, 0)."""
         best = 0

@@ -116,7 +116,6 @@ def run_pipeline(
     bands: int = 8,
     rows_per_band: int = 4,
     use_tfidf: bool = True,
-    tfidf_impl: str = "jvm",
     max_rows_per_task: int = 2000,
     checkpoint_dir: str | None = None,
     adaptive: bool = False,
@@ -142,11 +141,6 @@ def run_pipeline(
     channel_weights: optional fused-score weights (e.g. from
     ``scoring.fit_channel_weights`` on labeled pairs); None → the fixed
     defaults.
-
-    tfidf_impl: "jvm" (hash-merged map_zip_with kernel; payload = map +
-    norm) or "udf" (Arrow bincount/einsum kernel; payload = idx + val
-    arrays). Only the chosen kernel's representation rides the pair
-    payload.
 
     repair_outliers: run the G11 post-clustering repair (reference
     local_embedding.py:400-441) — singletons re-attach to their best
@@ -190,14 +184,10 @@ def run_pipeline(
             n_docs=n_files, distinct_tokens=True,
         )
         # tfidf_features emits BOTH sparse representations; ship only the
-        # one the chosen kernel reads — the other is dead weight through
-        # the members persist, the pair broadcast (twice), and every
-        # surviving pair row: (map, norm) for the JVM map_zip_with kernel,
-        # (idx, val) for the Arrow bincount kernel.
-        if tfidf_impl == "jvm":
-            feats = feats.drop("tfidf_idx", "tfidf_val")
-        else:
-            feats = feats.drop("tfidf_map", "tfidf_norm")
+        # (map, norm) pair score_pairs' JVM kernel reads — (idx, val) would
+        # be dead weight through the members persist, the pair broadcast
+        # (twice), and every surviving pair row
+        feats = feats.drop("tfidf_idx", "tfidf_val")
         norm = norm.join(feats, "id", "left")
     members = (
         norm.withColumn("block_key", F.concat_ws("|", "lang", "stem"))
@@ -319,7 +309,7 @@ def run_pipeline(
             wide = wide.persist()
             _scoring_hold.append(wide)
             prelim = scoring.score_pairs(
-                wide, tfidf_impl=tfidf_impl, prune_below=threshold * 0.75
+                wide, prune_below=threshold * 0.75
             )
             graph = prelim.where(F.col("score") >= threshold * 0.75).select(
                 "id_a", "id_b", F.col("score").alias("w")
@@ -356,7 +346,7 @@ def run_pipeline(
         else:
             prune = threshold
         scored = scoring.score_pairs(
-            wide, weights=weights, tfidf_impl=tfidf_impl, prune_below=prune
+            wide, weights=weights, prune_below=prune
         )
         keep = ["block_key", "id_a", "id_b", "content_sha_a", "content_sha_b",
                 "token_jaccard", "shingle_jaccard", "path_sim", "tfidf_cosine",

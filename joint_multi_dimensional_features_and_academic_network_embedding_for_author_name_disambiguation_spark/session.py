@@ -11,6 +11,42 @@ import os
 
 from pyspark.sql import SparkSession
 
+# cgroup v2, then v1: the memory limit of the container this process runs in
+CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def machine_memory_bytes() -> int:
+    """Memory this process may use: MemTotal, capped by a cgroup limit."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():  # "max" (v2) means no limit
+            total = min(total, int(raw))
+    return total
+
+
+def default_cpus() -> int:
+    """Core count for local mode: ``$SPARK_GRAFT_CPUS``, else every core."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def default_driver_memory() -> str:
+    """Driver heap: ``$SPARK_GRAFT_DRIVER_MEM``, else half the machine.
+
+    In local mode the driver JVM is the only executor. The other half is
+    headroom for the JVM's off-heap memory, the Arrow/pandas Python
+    workers (one per core) and the OS: a heap sized past physical memory
+    grows until the kernel kills the JVM mid-run.
+    """
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{machine_memory_bytes() // 2 // 2**20}m"
+
 
 def get_spark(
     master: str | None = None,
@@ -20,13 +56,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; on a
-    real cluster it is supplied by spark-submit and must be left None.
+    ``master`` defaults to ``local[default_cpus()]``; on a real cluster it
+    is supplied by spark-submit and must be left None.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and not os.environ.get("SPARK_GRAFT_SUBMITTED"):
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{default_cpus()}]"
     if master:
         builder = builder.master(master)
 
@@ -44,9 +79,9 @@ def get_spark(
         # spot) pass shuffle_partitions explicitly, as bench_scaling.py
         # does — a real cluster overrides via spark-submit --conf.
         try:
-            n = int(master.split("[")[1].rstrip("]")) if master and "[" in master else 32
+            n = int(master.split("[")[1].rstrip("]")) if master and "[" in master else default_cpus()
         except ValueError:
-            n = 32
+            n = default_cpus()
         shuffle_partitions = max(16, 2 * n)
 
     conf = {
@@ -70,9 +105,7 @@ def get_spark(
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         # Quiet local UI.
         "spark.ui.enabled": "false",
-        # local mode: the driver JVM is the only executor — size it for the
-        # cached pair/feature tables (8g causes GC storms at 10M+ pairs)
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.driver.memory": default_driver_memory(),
     }
     if extra_conf:
         conf.update(extra_conf)

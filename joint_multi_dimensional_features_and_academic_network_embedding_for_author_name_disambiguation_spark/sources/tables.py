@@ -40,13 +40,3 @@ def documents_as_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").alias("content"),
     )
 
-
-def file_id(df: DataFrame) -> DataFrame:
-    """Attach the canonical row id `repo:path:commit` and content sha.
-
-    The sha2(content,256) column is the per-row invariant carried through
-    every stage (BASELINE.json: content sha256 equality vs source).
-    """
-    return df.withColumn(
-        "id", F.concat_ws(":", F.col("repo"), F.col("path"), F.col("commit"))
-    ).withColumn("content_sha", F.sha2(F.col("content"), 256))

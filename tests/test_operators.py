@@ -99,14 +99,12 @@ def test_similarity_functions(spark):
         S.tanimoto(F.col("ta"), F.col("tb")).alias("t"),
         S.levenshtein_ratio(F.col("sa"), F.col("sb")).alias("l"),
         S.cosine(F.col("va"), F.col("vb")).alias("c"),
-        S.containment(F.col("ta"), F.col("tb")).alias("cn"),
     ).first()
     assert abs(r.j - 2 / 4) < 1e-9
     assert abs(r.t - 2 / 4) < 1e-9
     assert abs(r.l - (1 - 3 / 7)) < 1e-9
     want_cos = (3 + 4 + 3) / (math.sqrt(14) * math.sqrt(14))
     assert abs(r.c - want_cos) < 1e-9
-    assert abs(r.cn - 2 / 3) < 1e-9
 
 
 def test_cosine_batch_matches_hof(spark):
@@ -134,11 +132,9 @@ def test_text_functions(spark):
     df = spark.createDataFrame([("Hello, WORLD! the a of 42 xx",)], "t string")
     r = df.select(
         T.tokenize(F.col("t")).alias("toks"),
-        T.token_count(F.col("t")).alias("n"),
         T.path_stem(F.lit("src/Parse_Config_v2.PY")).alias("stem"),
     ).first()
     assert r.toks == ["hello", "world", "42", "xx"]
-    assert r.n == 7
     assert r.stem == "parseconfig"
 
 
@@ -153,23 +149,25 @@ def test_char_bag_distance(spark):
 
 
 def test_connected_components_contraction_long_chain(spark):
-    """Edge contraction (contract_after=1) must reach the same fixpoint as
-    plain hash-min on a diameter-20 chain — the worst case for hash-min —
-    and still label every vertex with the chain's minimum id."""
+    """Forced edge contraction (contract_min_changed=0) must reach the
+    same fixpoint as the default gate (which never contracts a graph this
+    small) on a diameter-20 chain — the worst case for hash-min — and
+    still label every vertex with the chain's minimum id."""
     n = 21
     ids = [f"v{i:02d}" for i in range(n)]
     edges = [(ids[i], ids[i + 1]) for i in range(n - 1)] + [("x1", "x2")]
     verts = sorted({v for e in edges for v in e} | {"iso"})
     vdf = spark.createDataFrame([(v,) for v in verts], "id string")
     edf = spark.createDataFrame(edges, "id_a string, id_b string")
-    contracted = connected_components(vdf, edf, contract_after=1)
-    plain = connected_components(vdf, edf, contract_after=0)
+    contracted = connected_components(vdf, edf, contract_min_changed=0)
+    plain = connected_components(vdf, edf)
     got_c = {r.id: r.component for r in contracted.labels.collect()}
     got_p = {r.id: r.component for r in plain.labels.collect()}
     assert got_c == got_p
     assert all(got_c[v] == "v00" for v in ids)
     assert got_c["x1"] == got_c["x2"] == "x1" and got_c["iso"] == "iso"
-    assert contracted.converged and plain.converged
+    assert any(m["phase"] == "quotient" for m in contracted.metrics)
+    assert all(m["phase"] == "full" for m in plain.metrics)
     # pointer jumping gives O(log diameter) rounds: a diameter-20 chain
     # must converge in far fewer than 20 iterations in both modes
     assert contracted.iterations <= 9 and plain.iterations <= 9

@@ -7,13 +7,20 @@ depends on.
 """
 
 import itertools
+import json
+import os
+import shutil
+import tempfile
 
 import pyspark.sql.functions as F
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
+from jmdfane_spark import persist
 from jmdfane_spark.functions.similarity import jaccard
+from jmdfane_spark.operators.connected_components import connected_components
 from jmdfane_spark.operators.evaluate import pairwise_f1
+from jmdfane_spark.plans.checkpoint import CheckpointManager
 
 labels_strategy = st.lists(
     st.tuples(st.integers(0, 2), st.integers(0, 3), st.integers(0, 3)),
@@ -89,3 +96,73 @@ def test_jaro_winkler_batch_property(pairs):
         else:
             assert g == want, (a, b, g, want)
             assert 0.0 <= g <= 1.0
+
+
+def _union_find(verts, edges):
+    """Component = smallest member id (the root of a union-by-min forest)."""
+    parent = {v: v for v in verts}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in verts}
+
+
+graphs = st.integers(1, 24).flatmap(
+    lambda n: st.tuples(
+        st.just(n),
+        st.lists(
+            st.tuples(st.integers(0, n - 1), st.integers(0, n - 1)),
+            min_size=n // 2,
+            max_size=2 * n,
+        ),
+    )
+)
+# a path whose ids are not in path order: the quotient phase runs several
+# rounds, so losing the newest snapshot resumes inside it
+_PATH = [5, 11, 0, 14, 3, 9, 1, 12, 7, 15, 2, 10, 6, 13, 4, 8]
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(graphs, st.integers(0, 1000))
+@example((16, list(zip(_PATH, _PATH[1:]))), 0)
+def test_connected_components_property(spark, graph, lost):
+    """CC == union-find on random graphs with forced contraction, with the
+    default contraction gate, and checkpointed (forced contraction) after
+    the newest 1..all committed snapshots are deleted and the run is
+    resumed — a crash at any point of the snapshot sequence."""
+    n, raw = graph
+    verts = [f"v{i}" for i in range(n)]  # lexicographic ids: "v10" < "v2"
+    edges = [(verts[a], verts[b]) for a, b in raw]
+    want = _union_find(verts, edges)
+    vdf = spark.createDataFrame([(v,) for v in verts], "id string")
+    edf = spark.createDataFrame(edges, "id_a string, id_b string")
+
+    def labels(**kw):
+        res = connected_components(vdf, edf, **kw)
+        return {r.id: r.component for r in res.labels.collect()}
+
+    try:
+        assert labels(contract_min_changed=0) == want
+        assert labels() == want
+        with tempfile.TemporaryDirectory() as root:
+            ck = CheckpointManager(spark, root)
+            assert labels(checkpointer=ck, contract_min_changed=0) == want
+
+            def committed_at(d):
+                with open(os.path.join(root, d, "_COMMITTED")) as f:
+                    return json.load(f)["ts"]
+
+            snaps = sorted(os.listdir(root), key=committed_at)
+            for d in snaps[len(snaps) - 1 - lost % len(snaps):]:
+                shutil.rmtree(os.path.join(root, d))
+            ck = CheckpointManager(spark, root)
+            assert labels(checkpointer=ck, contract_min_changed=0) == want
+    finally:
+        persist.release()
