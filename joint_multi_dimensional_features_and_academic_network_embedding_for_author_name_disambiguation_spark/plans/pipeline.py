@@ -31,8 +31,21 @@ from ..operators.pairs import blocked_pairs
 from .checkpoint import CheckpointManager
 
 
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes compiled so far by this JVM (cache hits excluded)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 @dataclass
 class PipelineResult:
+    """``metrics["codegen_compiles"]`` is the number of generated classes
+    compiled during the ``run_pipeline`` call; a warm rerun of the same
+    pipeline should read 0. The count is session-wide, so concurrent jobs
+    in the same session add to it. It is exact in local mode; on a cluster
+    it counts driver-side compiles only (executors compile in their own
+    JVMs)."""
+
     labels: DataFrame                      # (block_key, id, component, content_sha)
     metrics: dict = field(default_factory=dict)
     persists: list = field(default_factory=list)
@@ -152,6 +165,7 @@ def run_pipeline(
 
     ck = CheckpointManager(spark, checkpoint_dir) if checkpoint_dir else None
     metrics: dict = {}
+    compiles0 = _codegen_compiles(spark)
     _t0 = _time.time()
 
     def _label(desc: str) -> None:
@@ -378,15 +392,15 @@ def run_pipeline(
     if ck:
         ck.log_metric(stage="scoring", pairs_scored=n_scored)
 
-    def _live_persists() -> list:
-        # intermediates the returned (lazy) labels still read from; handed
-        # to PipelineResult.release() so callers free them after
-        # materializing. With a checkpoint manager, `scored` is a parquet
-        # read, not a persist.
-        out = [members, pairs]
-        if not ck:
-            out.append(scored)
-        return out
+    def _result(labels: DataFrame, extra_persists: list) -> PipelineResult:
+        # persists: intermediates the returned (lazy) labels still read
+        # from; handed to PipelineResult.release() so callers free them
+        # after materializing. With a checkpoint manager, `scored` is a
+        # parquet read, not a persist.
+        persists = [members, pairs] + ([] if ck else [scored]) + extra_persists
+        metrics["codegen_compiles"] = _codegen_compiles(spark) - compiles0
+        spark.sparkContext.setJobDescription(None)
+        return PipelineResult(labels=labels, metrics=metrics, persists=persists)
 
     # ---- stage 3: transitive clustering --------------------------------------
     vertices = members.select("id", "block_key", "content_sha")
@@ -456,8 +470,7 @@ def run_pipeline(
                 cross_block_pairs_dropped=n_cross_dropped,
             )
             ck.flush_metrics()
-        spark.sparkContext.setJobDescription(None)
-        return PipelineResult(labels=labels, metrics=metrics, persists=_live_persists())
+        return _result(labels, [])
 
     _label("stage3 cc")
     cc = connected_components(
@@ -477,10 +490,7 @@ def run_pipeline(
         labels = _repair(
             labels, scored, threshold if repair_min_score is None else repair_min_score
         )
-    spark.sparkContext.setJobDescription(None)
-    return PipelineResult(
-        labels=labels, metrics=metrics, persists=_live_persists() + cc.persists
-    )
+    return _result(labels, cc.persists)
 
 
 def _repair(labels: DataFrame, scored: DataFrame, min_score: float) -> DataFrame:

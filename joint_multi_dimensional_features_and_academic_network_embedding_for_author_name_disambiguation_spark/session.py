@@ -17,6 +17,13 @@ CGROUP_MEMORY_LIMITS = (
     "/sys/fs/cgroup/memory/memory.limit_in_bytes",
 )
 
+# Entries in the JVM-wide cache of compiled generated classes (Spark's
+# default: 100). One er_hotblock benchmark op uses 119-135 distinct classes
+# and a whole tools/check_oracles.py session 630, so at 100 the LRU cycled:
+# a warm op recompiled most of its classes (106 of 131 on one op; 798
+# recompiles over the oracle session) and restarted their JIT warm-up.
+CODEGEN_CACHE_MAX_ENTRIES = 2000
+
 
 def machine_memory_bytes() -> int:
     """Memory this process may use: MemTotal, capped by a cgroup limit."""
@@ -103,6 +110,13 @@ def get_spark(
         # Parquet scans: pushdown + pruning are on by default; pin anyway.
         "spark.sql.parquet.filterPushdown": "true",
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+        # Static: read once, when the first session in the JVM starts.
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_MAX_ENTRIES),
+        # Keep the stage id out of generated class names: AQE numbers
+        # codegen stages in the order query stages finish, so with the id
+        # in the name the same plan generated different source on about
+        # one warm er_hotblock op in eight and recompiled 4 classes.
+        "spark.sql.codegen.useIdInClassName": "false",
         # Quiet local UI.
         "spark.ui.enabled": "false",
         "spark.driver.memory": default_driver_memory(),

@@ -234,3 +234,24 @@ def test_tfidf_arrow_kernel_matches_jvm(spark, fixture_dfs):
     assert any(r.jvm > 0.1 for r in rows)
     for r in rows:
         assert abs(r.jvm - r.arrow) < 1e-6, (r.jvm, r.arrow)
+
+
+def test_warm_rerun_compiles_no_classes(spark):
+    """A second run of the same pipeline reuses every generated class.
+    This hot-block fixture compiles 121 distinct classes in a fresh JVM,
+    more than Spark's default codegen cache of 100 entries: at that
+    default the cache cycles and the rerun recompiles about 85 of them."""
+    from jmdfane_spark import persist
+    from jmdfane_spark.sources import synthetic
+
+    files, _, _ = synthetic.to_spark(spark, synthetic.synthesize(
+        n_blocks=12, min_rows=20, max_rows=20, hot_block_rows=120,
+        clusters_per_block=(2, 20),
+    ))
+    kw = dict(threshold=0.4, use_bands=False, use_tfidf=True, max_rows_per_task=100)
+    for _ in range(2):
+        res = run_pipeline(spark, files, **kw)
+        res.labels.count()
+        res.release()
+        persist.release()
+    assert res.metrics["codegen_compiles"] == 0, res.metrics["codegen_compiles"]
