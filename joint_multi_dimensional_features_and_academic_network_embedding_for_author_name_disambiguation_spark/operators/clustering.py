@@ -39,27 +39,16 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .connected_components import min_label_roots
+
 
 # --------------------------------------------------------------------------
 # numpy core (also used directly by tests)
 # --------------------------------------------------------------------------
 
-def _uf_find(parent: np.ndarray, x: int) -> int:
-    while parent[x] != x:
-        parent[x] = parent[parent[x]]
-        x = parent[x]
-    return x
-
-
 def _n_components(mask: np.ndarray) -> int:
-    n = mask.shape[0]
-    parent = np.arange(n)
     ii, jj = np.nonzero(np.triu(mask, 1))
-    for i, j in zip(ii.tolist(), jj.tolist()):
-        ri, rj = _uf_find(parent, i), _uf_find(parent, j)
-        if ri != rj:
-            parent[ri] = rj
-    return len({_uf_find(parent, i) for i in range(n)})
+    return len(np.unique(min_label_roots(ii, jj, mask.shape[0])))
 
 
 def _nn_chain_average(dist: np.ndarray) -> list[tuple[float, int, int]]:
@@ -106,13 +95,9 @@ def _nn_chain_average(dist: np.ndarray) -> list[tuple[float, int, int]]:
 def _cut_k(n: int, merges: list[tuple[float, int, int]], k: int) -> np.ndarray:
     """Labels (0..k-1, order of first appearance) after the first n-k
     merges of the height-sorted merge list."""
-    parent = np.arange(n)
-    for _, a, b in merges[: max(0, n - k)]:
-        ra, rb = _uf_find(parent, a), _uf_find(parent, b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    roots = np.array([_uf_find(parent, i) for i in range(n)])
-    _, labels = np.unique(roots, return_inverse=True)
+    ab = np.array([(a, b) for _, a, b in merges[: max(0, n - k)]], dtype=np.int64)
+    ab = ab.reshape(-1, 2)
+    _, labels = np.unique(min_label_roots(ab[:, 0], ab[:, 1], n), return_inverse=True)
     return labels
 
 
@@ -261,12 +246,8 @@ def gn_labels(adj: np.ndarray) -> np.ndarray:
     deg = mask.sum(axis=0).astype("float64")
 
     def components(es: set) -> np.ndarray:
-        parent = np.arange(n)
-        for a, b in es:
-            ra, rb = _uf_find(parent, a), _uf_find(parent, b)
-            if ra != rb:
-                parent[ra] = rb
-        return np.array([_uf_find(parent, i) for i in range(n)])
+        ab = np.array(sorted(es), dtype=np.int64).reshape(-1, 2)
+        return min_label_roots(ab[:, 0], ab[:, 1], n)
 
     def modularity_q(labels: np.ndarray) -> float:
         q = 0.0
@@ -574,15 +555,8 @@ def _solve_spectral_block(
 def _threshold_cc_labels(sim: np.ndarray, threshold: float) -> np.ndarray:
     """Union-find components of the thresholded graph — identical semantics
     to the engine's distributed hash-min CC (the oversized-block path)."""
-    n = sim.shape[0]
-    parent = np.arange(n)
     ii, jj = np.nonzero(np.triu(sim > threshold, 1))
-    for i, j in zip(ii.tolist(), jj.tolist()):
-        ri, rj = _uf_find(parent, i), _uf_find(parent, j)
-        if ri != rj:
-            parent[max(ri, rj)] = min(ri, rj)
-    roots = np.array([_uf_find(parent, i) for i in range(n)])
-    _, labels = np.unique(roots, return_inverse=True)
+    _, labels = np.unique(min_label_roots(ii, jj, sim.shape[0]), return_inverse=True)
     return labels
 
 
@@ -593,16 +567,10 @@ def _threshold_cc_labels_edges(
     oversized-block fallback. O(|E|) memory: never allocates the dense
     n×n matrix, which is the whole point of the guard (an 100k-row block
     would otherwise allocate 80 GB before the fallback could run)."""
-    parent = np.arange(n)
-    for a, b, s in zip(pdf["_a"], pdf["_b"], pdf["_s"]):
-        if s > threshold:
-            i, j = pos[a], pos[b]
-            if i != j:
-                ri, rj = _uf_find(parent, i), _uf_find(parent, j)
-                if ri != rj:
-                    parent[max(ri, rj)] = min(ri, rj)
-    roots = np.array([_uf_find(parent, i) for i in range(n)])
-    _, labels = np.unique(roots, return_inverse=True)
+    keep = (pdf["_s"] > threshold).to_numpy()
+    ii = pdf["_a"][keep].map(pos).to_numpy(dtype=np.int64)
+    jj = pdf["_b"][keep].map(pos).to_numpy(dtype=np.int64)
+    _, labels = np.unique(min_label_roots(ii, jj, n), return_inverse=True)
     return labels
 
 

@@ -78,15 +78,17 @@ def merge_components(
 ) -> DataFrame:
     """Fold a delta into the labels table.
 
-    Warm start: existing rows are seeded with their current component id
-    (not their own id), so unaffected components converge in iteration 1
-    and keep stable ids; new edges can merge old components (min id wins,
-    exactly as a full recompute would).
+    Warm start: every existing row is linked to its current component id
+    by a seed edge, so new edges can merge old components (min id wins,
+    exactly as a full recompute would) and unaffected components keep
+    stable ids. connected_components solves the union: on the driver
+    when the seed and delta edges fit under its DRIVER_MAX_EDGES bound,
+    by hash-min rounds otherwise.
     """
     seeded = existing_labels.select(id_col, "component").unionByName(
         new_vertices.select(F.col(id_col), F.col(id_col).alias("component"))
     )
-    # hash-min over the union; edges only need the delta because existing
+    # CC over the union; edges only need the delta because existing
     # intra-component edges are already reflected in the seeds — BUT old
     # component ids must be linked to their seed: treat (id, component)
     # as edges so merges propagate through existing clusters.

@@ -69,6 +69,11 @@ def test_resume_from_checkpoint(spark, fixture_dfs, tmp_path):
     assert a == b
     m = pairwise_f1_on_labeled_pairs(r2.labels, lpairs)
     assert m["f1"] >= 0.99
+    # CC finished on the driver and the rerun read its committed map
+    assert [c["phase"] for c in r1.metrics["cc_metrics"]] == ["driver"]
+    assert r1.metrics["cc_metrics"][0]["edges"] > 0
+    assert r2.metrics["cc_metrics"][0]["phase"] == "driver"
+    assert r2.metrics["cc_metrics"][0]["edges"] is None
 
 
 def test_normalize_schema(spark, fixture_dfs):

@@ -18,6 +18,7 @@ from hypothesis import strategies as st
 
 from jmdfane_spark import persist
 from jmdfane_spark.functions.similarity import jaccard
+from jmdfane_spark.operators import connected_components as cc_mod
 from jmdfane_spark.operators.connected_components import connected_components
 from jmdfane_spark.operators.evaluate import pairwise_f1
 from jmdfane_spark.plans.checkpoint import CheckpointManager
@@ -132,11 +133,13 @@ _PATH = [5, 11, 0, 14, 3, 9, 1, 12, 7, 15, 2, 10, 6, 13, 4, 8]
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(graphs, st.integers(0, 1000))
 @example((16, list(zip(_PATH, _PATH[1:]))), 0)
-def test_connected_components_property(spark, graph, lost):
+def test_connected_components_property(spark, monkeypatch, graph, lost):
     """CC == union-find on random graphs with forced contraction, with the
     default contraction gate, and checkpointed (forced contraction) after
     the newest 1..all committed snapshots are deleted and the run is
-    resumed — a crash at any point of the snapshot sequence."""
+    resumed — a crash at any point of the snapshot sequence. Every case
+    runs with the driver finish at its default bound and turned off (0),
+    where the hash-min rounds solve it."""
     n, raw = graph
     verts = [f"v{i}" for i in range(n)]  # lexicographic ids: "v10" < "v2"
     edges = [(verts[a], verts[b]) for a, b in raw]
@@ -149,20 +152,123 @@ def test_connected_components_property(spark, graph, lost):
         return {r.id: r.component for r in res.labels.collect()}
 
     try:
-        assert labels(contract_min_changed=0) == want
-        assert labels() == want
-        with tempfile.TemporaryDirectory() as root:
-            ck = CheckpointManager(spark, root)
-            assert labels(checkpointer=ck, contract_min_changed=0) == want
+        for bound in (cc_mod.DRIVER_MAX_EDGES, 0):
+            with monkeypatch.context() as mp:
+                mp.setattr(cc_mod, "DRIVER_MAX_EDGES", bound)
+                assert labels(contract_min_changed=0) == want
+                assert labels() == want
+                with tempfile.TemporaryDirectory() as root:
+                    ck = CheckpointManager(spark, root)
+                    assert labels(checkpointer=ck, contract_min_changed=0) == want
 
-            def committed_at(d):
-                with open(os.path.join(root, d, "_COMMITTED")) as f:
-                    return json.load(f)["ts"]
+                    def committed_at(d):
+                        with open(os.path.join(root, d, "_COMMITTED")) as f:
+                            return json.load(f)["ts"]
 
-            snaps = sorted(os.listdir(root), key=committed_at)
-            for d in snaps[len(snaps) - 1 - lost % len(snaps):]:
-                shutil.rmtree(os.path.join(root, d))
-            ck = CheckpointManager(spark, root)
-            assert labels(checkpointer=ck, contract_min_changed=0) == want
+                    snaps = sorted(os.listdir(root), key=committed_at)
+                    for d in snaps[len(snaps) - 1 - lost % len(snaps):]:
+                        shutil.rmtree(os.path.join(root, d))
+                    ck = CheckpointManager(spark, root)
+                    assert labels(checkpointer=ck, contract_min_changed=0) == want
+    finally:
+        persist.release()
+
+
+def _cc(spark, verts, edges, **kw):
+    vdf = spark.createDataFrame([(v,) for v in verts], "id string")
+    edf = spark.createDataFrame(edges, "id_a string, id_b string")
+    res = connected_components(vdf, edf, **kw)
+    return {r.id: r.component for r in res.labels.collect()}, res
+
+
+def test_cc_driver_finish_degenerate_graphs(spark):
+    """The driver finish == union-find on isolated vertices, an empty edge
+    set, self-loops and duplicate edges, in one job-bounded pass: one
+    metrics row, phase "driver", at the fixpoint."""
+    verts = ["a", "b", "c", "d", "iso1", "iso2"]
+    cases = [
+        [],  # empty edge set: every vertex is its own component
+        [("b", "b"), ("iso1", "iso1")],  # self-loops only
+        [("c", "a"), ("a", "c"), ("c", "a"), ("d", "d"), ("b", "d")],  # dups
+    ]
+    try:
+        for edges in cases:
+            got, res = _cc(spark, verts, edges)
+            assert got == _union_find(verts, edges), edges
+            assert res.iterations == 1
+            assert res.metrics == [{
+                "iteration": 1, "phase": "driver", "edges": len(edges),
+                "labels_changed": 0, "wall_sec": res.metrics[0]["wall_sec"],
+            }]
+    finally:
+        persist.release()
+
+
+def test_cc_driver_finish_min_id_is_spark_string_order(spark, monkeypatch):
+    """Component = the smallest id in Spark's string order, which is not
+    numeric order ("v10" < "v2") and puts a non-ASCII id after every
+    ASCII one ("é" > "z"). Both paths must agree with the union-find."""
+    verts = ["v2", "v10", "v9", "z", "é", "e", "ü"]
+    edges = [("v2", "v10"), ("v9", "v2"), ("z", "é"), ("é", "e")]
+    want = _union_find(verts, edges)
+    assert want["v9"] == "v10" and want["z"] == "e" and want["ü"] == "ü"
+    try:
+        assert _cc(spark, verts, edges)[0] == want
+        monkeypatch.setattr(cc_mod, "DRIVER_MAX_EDGES", 0)
+        assert _cc(spark, verts, edges)[0] == want
+    finally:
+        persist.release()
+
+
+def test_cc_driver_finish_resumes_from_its_snapshot(spark, tmp_path):
+    """Checkpointed, the driver map is one committed snapshot
+    (cc_driver). A rerun reads it without collecting the edges again; a
+    rerun after the snapshot is deleted solves again to identical labels."""
+    verts = [f"v{i}" for i in range(12)]
+    edges = [("v3", "v7"), ("v7", "v11"), ("v0", "v5"), ("v5", "v0")]
+    want = _union_find(verts, edges)
+    root = str(tmp_path / "ck")
+    try:
+        got, res = _cc(spark, verts, edges, checkpointer=CheckpointManager(spark, root))
+        assert got == want and os.listdir(root) == ["cc_driver"]
+        assert res.metrics[-1]["edges"] == len(edges)
+        marker = os.path.join(root, "cc_driver", "_COMMITTED")
+        with open(marker) as f:
+            committed = f.read()
+
+        got, res = _cc(spark, verts, edges, checkpointer=CheckpointManager(spark, root))
+        assert got == want
+        assert res.metrics[-1]["phase"] == "driver" and res.metrics[-1]["edges"] is None
+        with open(marker) as f:
+            assert f.read() == committed  # read, not rewritten
+
+        shutil.rmtree(os.path.join(root, "cc_driver"))
+        got, res = _cc(spark, verts, edges, checkpointer=CheckpointManager(spark, root))
+        assert got == want and res.metrics[-1]["edges"] == len(edges)
+    finally:
+        persist.release()
+
+
+def test_cc_driver_finishes_the_quotient(spark, tmp_path, monkeypatch):
+    """A graph above the bound runs a hash-min round and contracts; a
+    quotient under the bound finishes on the driver right away, also
+    checkpointed and after its cc_driver snapshot is lost."""
+    verts = [f"v{i}" for i in _PATH] + ["iso"]
+    edges = [(f"v{a}", f"v{b}") for a, b in zip(_PATH, _PATH[1:])]
+    want = _union_find(verts, edges)
+    monkeypatch.setattr(cc_mod, "DRIVER_MAX_EDGES", len(edges) - 1)
+    root = str(tmp_path / "ck")
+    try:
+        for ck in (None, CheckpointManager(spark, root)):
+            got, res = _cc(spark, verts, edges, checkpointer=ck, contract_min_changed=0)
+            assert got == want
+            assert [m["phase"] for m in res.metrics] == ["full", "driver"]
+            assert res.metrics[-1]["edges"] < len(edges)
+        shutil.rmtree(os.path.join(root, "cc_driver"))
+        got, res = _cc(
+            spark, verts, edges, checkpointer=CheckpointManager(spark, root),
+            contract_min_changed=0,
+        )
+        assert got == want and [m["phase"] for m in res.metrics] == ["driver"]
     finally:
         persist.release()
