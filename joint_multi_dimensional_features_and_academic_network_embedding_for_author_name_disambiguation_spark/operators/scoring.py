@@ -181,23 +181,31 @@ def score_pairs(
     """Attach per-channel similarities + fused score to a candidate-pair df.
 
     Expects payload columns tokens_a/b, shingles_a/b, norm_path_a/b and
-    (optionally) the tfidf_* columns from ``tfidf_features``. One select —
-    a single pass over the pair stream, no intermediate materialization.
+    (optionally) the tfidf_* columns from ``tfidf_features``. A single
+    pass over the pair stream, no intermediate materialization.
 
-    ``prune_below``: tiered-cascade optimization. Tier 0 bounds the fused
-    score from SIZE RATIOS alone (token_jaccard ≤ min|T|/max|T|,
+    ``prune_below``: tiered cascade that returns EDGES ONLY — the rows
+    with ``score >= prune_below``, the same rows (channels and score
+    bit-equal, from the identical expressions) a full pass filtered at
+    that bound gives. It is a filter chain: tier 0 bounds the fused score
+    from SIZE RATIOS alone (token_jaccard ≤ min|T|/max|T|,
     shingle_jaccard ≤ min|S|/max|S|, other channels := 1) — O(1) per
     pair, no intersect, no edit distance; measured 43% of the sf0.1
     bench pair stream pruned before any per-element work. Survivors get
     the cheap channels (token Jaccard, path lev); tier 1 re-bounds with
     the exact token Jaccard; tier 2 re-bounds with the exact shingle
-    Jaccard before the TF-IDF (and embedding) channels run. Pruned pairs
-    carry NULL for every channel not yet computed at their tier and
-    score = the (sub-threshold) upper bound of their tier — so any
-    downstream `score >= prune_below` filter selects exactly the same
-    edges as a full scoring pass (survivor scores are produced by the
-    identical expression, bit-equal). Leave None when the full channel
-    vector matters (e.g. per-block adaptive thresholds, A5).
+    Jaccard before the TF-IDF (and embedding) channels run. Each tier
+    binds its channels behind a Generate (``_bind``): Spark pushes a
+    filter through a plain projection and inlines its aliases, so with
+    ``withColumn`` every later tier predicate — and a caller's ``score``
+    filter — would re-run the intersects and the edit distance (51
+    ``array_intersect`` calls in one optimized plan, past codegen's 64 KB
+    method limit). Each tier filter keeps pairs whose bound is at least
+    ``prune_below − 2e-9``; that ε absorbs the 9-place rounding of the
+    Jaccard channels and of the score (their bounds are unrounded) and
+    the float error of summing the bound in another order.
+    Leave None when the full channel vector of every pair matters (e.g.
+    per-block adaptive thresholds, A5; GHAC/spectral; weight fitting).
 
     ``path_sim_impl``: "lev" (default, JVM levenshtein_ratio) or "jw"
     (Jaro-Winkler — the north_rule's other named character-level path
@@ -247,32 +255,36 @@ def score_pairs(
     else:
         tfidf_expr = F.col("token_jaccard")
 
+    fused: Column = sum(
+        (F.lit(wt) * F.col(ch) for ch, wt in w.items() if ch != "emb_cosine"),
+        F.lit(0.0),
+    )
+    if has_emb:
+        fused = F.when(
+            F.col("emb_cosine").isNotNull(),
+            fused + F.lit(w["emb_cosine"]) * F.col("emb_cosine"),
+        ).otherwise(fused / F.lit(oov_denom))
+    score = F.round(fused, 9)
+
     if prune_below is None:
         out = pairs.withColumn("token_jaccard", tok_expr)
         out = out.withColumn("path_sim", path_expr)
         out = out.withColumn("shingle_jaccard", shingle_expr)
         out = out.withColumn("tfidf_cosine", tfidf_expr)
-        fused: Column = sum(
-            (F.lit(wt) * F.col(ch) for ch, wt in w.items() if ch != "emb_cosine"),
-            F.lit(0.0),
-        )
         if has_emb:
             out = out.withColumn("emb_cosine", emb_expr)
-            fused = F.when(
-                F.col("emb_cosine").isNotNull(),
-                fused + F.lit(w["emb_cosine"]) * F.col("emb_cosine"),
-            ).otherwise(fused / F.lit(oov_denom))
-        return out.withColumn("score", F.round(fused, 9))
+        return out.withColumn("score", score)
 
     # ---- tiered cascade. Every ub is a true upper bound of the fused
     # score (channels bounded by size ratios where known, by 1 otherwise);
     # still valid for OOV-renormalized rows: (cheap + A)/(1−w_emb) ≤
-    # cheap + A + w_emb whenever cheap + A + w_emb ≤ 1 (weights are
-    # convex), so no tier under-prunes. EPS absorbs the round-9 applied
-    # to each channel and to the final score (≤ 5e-10 each): a bound may
-    # be exceeded by rounding alone, never by more than EPS.
-    EPS = 1e-9
-    thr = F.lit(prune_below - EPS)
+    # cheap + A + w_emb whenever cheap + A ≤ 1 − w_emb (weights are
+    # convex), so no tier under-prunes. EPS absorbs rounding: the Jaccard
+    # channels and the score are each rounded to 9 places (≤ 5e-10 up),
+    # their size-ratio bounds are not, and the bound sums its terms in
+    # another order. Together that is < 1e-9 + float error.
+    EPS = 2e-9
+    thr = prune_below - EPS
     w_t, w_p = w["token_jaccard"], w["path_sim"]
     w_s, w_f = w["shingle_jaccard"], w["tfidf_cosine"]
     w_e = w["emb_cosine"] if has_emb else 0.0
@@ -290,37 +302,33 @@ def score_pairs(
     ).otherwise(F.lit(0.0))
 
     # tier 0: sizes only — gates the intersects AND the edit distance
-    ub0 = F.lit(w_t) * r_tok + F.lit(w_p) + F.lit(w_s) * r_sh + F.lit(w_f + w_e)
-    keep0 = ub0 >= thr
-    out = pairs.withColumn("token_jaccard", F.when(keep0, tok_expr))
-    out = out.withColumn("path_sim", F.when(keep0, path_expr))
+    out = pairs.where(w_t * r_tok + w_p + w_s * r_sh + (w_f + w_e) >= thr)
+    out = _bind(out, token_jaccard=tok_expr, path_sim=path_expr)
     cheap_part = w_t * F.col("token_jaccard") + w_p * F.col("path_sim")
-
     # tier 1: exact cheap channels, shingle still bounded by its size ratio
-    ub1 = cheap_part + F.lit(w_s) * r_sh + F.lit(w_f + w_e)
-    keep1 = keep0 & (ub1 >= thr)
-    out = out.withColumn("shingle_jaccard", F.when(keep1, shingle_expr))
-
+    out = out.where(cheap_part + w_s * r_sh + (w_f + w_e) >= thr)
+    out = _bind(out, shingle_jaccard=shingle_expr)
     # tier 2: exact shingle — only now pay for TF-IDF (and embedding)
-    ub2 = cheap_part + w_s * F.col("shingle_jaccard") + F.lit(w_f + w_e)
-    keep2 = keep1 & (ub2 >= thr)
-    out = out.withColumn("tfidf_cosine", F.when(keep2, tfidf_expr))
-    fused_full = (
-        cheap_part
-        + w["shingle_jaccard"] * F.col("shingle_jaccard")
-        + w["tfidf_cosine"] * F.col("tfidf_cosine")
-    )
+    out = out.where(cheap_part + w_s * F.col("shingle_jaccard") + (w_f + w_e) >= thr)
+    late = {"tfidf_cosine": tfidf_expr}
     if has_emb:
-        out = out.withColumn("emb_cosine", F.when(keep2, emb_expr))
-        # emb_cosine is NULL when pruned OR OOV; `keep2` disambiguates
-        fused_full = F.when(
-            F.col("emb_cosine").isNotNull(),
-            fused_full + w["emb_cosine"] * F.col("emb_cosine"),
-        ).otherwise(fused_full / F.lit(oov_denom))
-    score = (
-        F.when(keep2, fused_full).when(keep1, ub2).when(keep0, ub1).otherwise(ub0)
+        late["emb_cosine"] = emb_expr
+    out = _bind(out, **late)
+    return out.withColumn("score", score).where(F.col("score") >= prune_below)
+
+
+def _bind(df: DataFrame, **cols: Column) -> DataFrame:
+    """Append ``cols`` to ``df`` behind a Generate (inline of a one-struct
+    array), so each expression is evaluated once per row.
+
+    A filter above a plain projection is pushed below it with every alias
+    inlined, so a kernel bound by ``withColumn`` would run again inside
+    each later tier predicate (and inside a caller's ``score`` filter).
+    Spark does not push a predicate on a generator's output below the
+    Generate, which pins each tier's kernels to their own operator."""
+    return df.select(
+        "*", F.inline(F.array(F.struct(*[c.alias(n) for n, c in cols.items()])))
     )
-    return out.withColumn("score", F.round(score, 9))
 
 
 def fit_channel_weights(

@@ -4,9 +4,11 @@
       0. normalize: id, content_sha, tokens, shingles, norm_path, stem
       1. BLOCKING: composite keys (lang|stem) + MinHash band keys,
          skew-split candidate-pair generation
-      2. SCORING: per-channel similarities + fused score
-         (JVM math + Arrow-batched TF-IDF cosine UDF)
-      3. CLUSTERING: threshold → hash-min connected components
+      2. SCORING: per-channel similarities + fused score, pruned by
+         the tiered cascade to the edge table (score ≥ τ); all JVM
+         math, TF-IDF cosine included (one map_zip_with pass)
+      3. CLUSTERING: connected components over the edges — finished on
+         the driver when the edge set fits, hash-min rounds otherwise
       4. labels(id, component) + per-stage metrics; every stage is a
          resumable checkpoint snapshot.
 
@@ -322,10 +324,7 @@ def run_pipeline(
 
             wide = wide.persist()
             _scoring_hold.append(wide)
-            prelim = scoring.score_pairs(
-                wide, prune_below=threshold * 0.75
-            )
-            graph = prelim.where(F.col("score") >= threshold * 0.75).select(
+            graph = scoring.score_pairs(wide, prune_below=threshold * 0.75).select(
                 "id_a", "id_b", F.col("score").alias("w")
             )
             walks = random_walks(
@@ -342,8 +341,9 @@ def run_pipeline(
                 "left",
             )
             weights = channel_weights or scoring.CHANNEL_WEIGHTS_EMB
-        # cascade pruning is edge-exact for a fixed threshold; adaptive
-        # per-block thresholds need the full channel vector (A5), and the
+        # with a prune bound, score_pairs returns only the pairs scoring at
+        # or above it (the cascade's edge table); adaptive per-block
+        # thresholds need the full channel vector (A5), and the
         # per-block dense clusterers need true sub-threshold scores (GHAC
         # can re-merge below τ; spectral embeds the full similarity matrix).
         # With repair_outliers the G11 merge phase reads pairs down to
@@ -367,12 +367,15 @@ def run_pipeline(
                 "emb_cosine", "score"]
         return scored.select(*[c for c in keep if c in scored.columns])
 
-    # persist: scored feeds both the metrics count and the CC edge input —
-    # without it the whole scoring stage executes twice. Non-checkpointed
-    # runs drop the two sha columns from the cache: no downstream branch
-    # (edge filter, adaptive, per-block solvers, repair) reads them, and
-    # at sf0.1 they are ~60% of the cached bytes (2×64-char strings per
-    # pair); the checkpointed snapshot keeps the full documented schema.
+    # persist: scored (the edge table when pruned, every pair otherwise)
+    # feeds both the metrics count and the CC edge input — without it the
+    # whole scoring stage executes twice. `edges` stays a filter at τ: with
+    # repair_outliers the table holds pairs down to repair_min_score.
+    # Non-checkpointed runs drop the two sha columns from the cache: no
+    # downstream branch (edge filter, adaptive, per-block solvers, repair)
+    # reads them, and at sf0.1 they are ~60% of the cached bytes
+    # (2×64-char strings per pair); the checkpointed snapshot keeps the
+    # full documented schema.
     _label("stage2 scoring")
     if ck:
         scored = ck.stage("scored", build_scored)
@@ -386,11 +389,12 @@ def run_pipeline(
     for _df in _scoring_hold:
         _df.unpersist()
     _scoring_hold.clear()
-    metrics["pairs_scored"] = n_scored
+    metrics["pairs_scored"] = n_pairs
+    metrics["edges"] = n_scored
     metrics["t_scoring"] = round(_time.time() - _t0, 2)
     _t0 = _time.time()
     if ck:
-        ck.log_metric(stage="scoring", pairs_scored=n_scored)
+        ck.log_metric(stage="scoring", pairs_scored=n_pairs, edges=n_scored)
 
     def _result(labels: DataFrame, extra_persists: list) -> PipelineResult:
         # persists: intermediates the returned (lazy) labels still read

@@ -16,11 +16,6 @@ per batch is not viable. The equivalent we provide:
                     labels keep their component ids, so downstream
                     references stay stable unless a merge occurs).
 
-Structured Streaming wiring: ``stream_files`` shows the readStream →
-foreachBatch shape where each micro-batch calls delta_pairs/merge; the
-state between batches is the checkpointed members/labels tables
-(Iceberg-snapshot semantics via plans.checkpoint), not executor state —
-so a restart resumes from the last committed snapshot.
 """
 
 from __future__ import annotations
@@ -100,30 +95,3 @@ def merge_components(
     res = connected_components(vertices, edges, id_col=id_col)
     return res.labels
 
-
-def stream_files(
-    spark,
-    source_dir: str,
-    schema: str,
-    process_batch,
-    checkpoint_dir: str,
-    fmt: str = "parquet",
-):
-    """readStream → foreachBatch(process_batch) wiring.
-
-    process_batch(batch_df, batch_id) is the user's incremental step
-    (normalize → delta_pairs → score → merge_components → write snapshot).
-    Offsets/commit log live under checkpoint_dir — exactly-once per
-    micro-batch against idempotent snapshot writes.
-    """
-    stream = (
-        spark.readStream.format(fmt)
-        .schema(schema)
-        .option("maxFilesPerTrigger", 16)
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )

@@ -241,6 +241,48 @@ def test_score_pairs_oov_excludes_channel(spark):
         assert abs(oov["score"] - expected) < 1e-9, (prune, oov["score"], expected)
 
 
+def test_score_cascade_binds_each_kernel_once(spark, fixture_dfs):
+    """A `score` filter over the pruned cascade must not re-inline the
+    channel kernels. With tiers bound by plain projections, Spark pushed
+    the filter through them and the optimized plan of this ingest-shaped
+    query held 51 array_intersect and 12 levenshtein calls (the full pass
+    holds 6 and 1), past codegen's 64 KB method limit. The Jaro-Winkler
+    path channel puts a pandas UDF inside a bound tier; its edges must
+    still equal the full pass's."""
+    from jmdfane_spark.operators.scoring import score_pairs
+    from jmdfane_spark.plans.pipeline import normalize_files
+    from jmdfane_spark.streaming.incremental import delta_pairs
+
+    m = (
+        normalize_files(fixture_dfs[0])
+        .withColumn("block_key", F.concat_ws("|", "lang", "stem"))
+        .drop("repo", "path", "commit")
+        .persist()
+    )
+    new_ids = [r.id for r in m.select("id").orderBy("id").collect()][::7]
+    dp = delta_pairs(m.where(F.col("id").isin(new_ids)), m.where(~F.col("id").isin(new_ids)))
+    dp = dp.persist()
+    tau = 0.4
+
+    def kernels(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("array_intersect("), plan.count("levenshtein(")
+
+    edges = score_pairs(dp, prune_below=tau).where(F.col("score") >= tau).select("id_a", "id_b")
+    (full_i, full_l), (got_i, got_l) = kernels(score_pairs(dp)), kernels(edges)
+    assert full_i > 0 and full_l > 0
+    assert got_i <= full_i and got_l <= full_l, ((got_i, got_l), (full_i, full_l))
+
+    for impl in ("lev", "jw"):
+        want = score_pairs(dp, path_sim_impl=impl).where(F.col("score") >= tau)
+        got = score_pairs(dp, prune_below=tau, path_sim_impl=impl)
+        want = sorted(map(tuple, want.select("id_a", "id_b", "score").collect()))
+        assert want, impl
+        assert sorted(map(tuple, got.select("id_a", "id_b", "score").collect())) == want, impl
+    dp.unpersist()
+    m.unpersist()
+
+
 def _jw_ref(a: str | None, b: str | None) -> float | None:
     """Independent per-row Jaro-Winkler reference (DuckDB semantics:
     UTF-8 bytes, greedy window match, t = mismatches//2, boost iff

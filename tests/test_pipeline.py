@@ -18,6 +18,9 @@ def test_flagship_f1(spark, fixture_dfs):
     assert m["f1"] >= 0.99, m
     m2 = pairwise_f1(res.labels.select("id", "component"), labels)
     assert m2["macro_f1"] >= 0.99, m2
+    # every candidate pair enters scoring; only the edges are kept
+    assert res.metrics["pairs_scored"] == res.metrics["pairs_generated"]
+    assert 0 < res.metrics["edges"] < res.metrics["pairs_scored"], res.metrics
 
 
 def test_flagship_f1_with_banding(spark, fixture_dfs):

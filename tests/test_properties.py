@@ -99,6 +99,88 @@ def test_jaro_winkler_batch_property(pairs):
             assert 0.0 <= g <= 1.0
 
 
+_SETS = st.frozensets(st.integers(0, 5), max_size=5)  # small universe: ties, subsets
+_VEC = st.one_of(st.none(), st.lists(st.integers(-2, 2), min_size=2, max_size=2))
+_TFIDF = st.dictionaries(st.integers(0, 4), st.integers(1, 3), max_size=3)
+_CASCADE_ROW = st.tuples(
+    _SETS, _SETS, _SETS, _SETS,
+    st.sampled_from(["p/q.py", "p/r.py", "pq.py", ""]),
+    st.sampled_from(["p/q.py", "p/r.py", "pq.py", ""]),
+    _VEC, _VEC, _TFIDF, _TFIDF,
+)
+
+
+@settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    st.lists(_CASCADE_ROW, min_size=1, max_size=10),
+    st.lists(st.integers(0, 6), min_size=5, max_size=5),
+    st.booleans(),
+    st.booleans(),
+    st.floats(0.0, 1.0),
+    st.integers(0, 10**6),
+)
+def test_score_cascade_equals_full_pass(spark, rows, raw_w, with_emb, with_tfidf, tau_free, pick):
+    """The pruned cascade returns exactly the full pass's rows with
+    score >= τ: the same pairs, channels and score, bit-equal. Weights are
+    random convex combinations (with and without emb_cosine), embeddings
+    may be OOV (NULL), and one τ per example is placed exactly on a pair's
+    score or on one of its tier-0/1/2 upper bounds."""
+    from jmdfane_spark.operators.scoring import score_pairs
+
+    chans = ["token_jaccard", "shingle_jaccard", "tfidf_cosine", "path_sim", "emb_cosine"]
+    raw = raw_w if with_emb else raw_w[:4]
+    raw = raw if sum(raw) else [1] + raw[1:]
+    w = {c: k / sum(raw) for c, k in zip(chans, raw)}
+
+    def norm(m):
+        return float(sum(float(v) * float(v) for v in m.values()) ** 0.5)
+
+    data = [
+        (f"a{i:02d}", f"b{i:02d}", sorted(ta), sorted(tb), sorted(sa), sorted(sb), pa, pb,
+         None if ea is None else [float(x) for x in ea],
+         None if eb is None else [float(x) for x in eb],
+         {k: float(v) for k, v in ma.items()}, norm(ma),
+         {k: float(v) for k, v in mb.items()}, norm(mb))
+        for i, (ta, tb, sa, sb, pa, pb, ea, eb, ma, mb) in enumerate(rows)
+    ]
+    pairs = spark.createDataFrame(
+        data,
+        "id_a string, id_b string, tokens_a array<bigint>, tokens_b array<bigint>, "
+        "shingles_a array<bigint>, shingles_b array<bigint>, norm_path_a string, "
+        "norm_path_b string, emb_vec_a array<double>, emb_vec_b array<double>, "
+        "tfidf_map_a map<bigint,float>, tfidf_norm_a double, "
+        "tfidf_map_b map<bigint,float>, tfidf_norm_b double",
+    )
+    if not with_tfidf:
+        pairs = pairs.drop("tfidf_map_a", "tfidf_norm_a", "tfidf_map_b", "tfidf_norm_b")
+    full = sorted(
+        (r.asDict() for r in score_pairs(pairs, weights=w).collect()),
+        key=lambda r: r["id_a"],
+    )
+
+    # tier bounds in the cascade's own terms, to put τ on a boundary
+    def ratio(x, y):
+        return min(len(x), len(y)) / max(len(x), len(y)) if x or y else 0.0
+
+    rest = w["tfidf_cosine"] + w.get("emb_cosine", 0.0)
+    bounds = []
+    for r, (ta, tb, sa, sb, *_) in zip(full, rows):
+        cheap = w["token_jaccard"] * r["token_jaccard"] + w["path_sim"] * r["path_sim"]
+        bounds += [
+            r["score"],
+            w["token_jaccard"] * ratio(ta, tb) + w["path_sim"]
+            + w["shingle_jaccard"] * ratio(sa, sb) + rest,
+            cheap + w["shingle_jaccard"] * ratio(sa, sb) + rest,
+            cheap + w["shingle_jaccard"] * r["shingle_jaccard"] + rest,
+        ]
+    for tau in (tau_free, bounds[pick % len(bounds)]):
+        got = sorted(
+            (r.asDict() for r in score_pairs(pairs, weights=w, prune_below=tau).collect()),
+            key=lambda r: r["id_a"],
+        )
+        assert got == [r for r in full if r["score"] >= tau], (tau, w)
+
+
 def _union_find(verts, edges):
     """Component = smallest member id (the root of a union-by-min forest)."""
     parent = {v: v for v in verts}
