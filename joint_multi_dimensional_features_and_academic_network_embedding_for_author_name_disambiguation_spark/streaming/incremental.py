@@ -10,11 +10,14 @@ per batch is not viable. The equivalent we provide:
   delta_pairs     — candidate pairs touching a new batch: (new × new)
                     within blocks PLUS (new × existing) against the
                     persisted members table — never (existing × existing),
-                    which is already scored.
-  merge_components — labels-table union with hash-min re-convergence
-                    seeded from existing components (warm start: old
-                    labels keep their component ids, so downstream
-                    references stay stable unless a merge occurs).
+                    which is already scored. One equi-join of the new
+                    batch against every member.
+  merge_components — labels-table union with a warm-started CC seeded
+                    from existing components (old labels keep their
+                    component ids, so downstream references stay stable
+                    unless a merge occurs). CC finishes on the driver
+                    when the seed and delta edges fit, by hash-min
+                    rounds otherwise.
 
 """
 
@@ -24,7 +27,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.connected_components import connected_components
-from ..operators.pairs import blocked_pairs
+
+
+def _q(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def delta_pairs(
@@ -32,37 +39,51 @@ def delta_pairs(
     existing_members: DataFrame,
     block_col: str = "block_key",
     id_col: str = "id",
-    max_rows_per_task: int = 2000,
 ) -> DataFrame:
     """Candidate pairs involving at least one new row.
 
-    new×new via the standard blocked self-join; new×existing via a plain
-    equi-join on the blocking key (no self-join semantics needed — the
-    sides are disjoint). Output schema matches blocked_pairs.
-    """
-    nn = blocked_pairs(new_members, block_col, id_col, max_rows_per_task)
+    One equi-join on the blocking key: the new batch against ``everyone``
+    (existing ∪ new, each row tagged new or not). A row is kept when
+    ``new.id < other.id``, or when ``other`` is existing and
+    ``new.id > other.id``, so each new×new pair comes out once, each
+    new×existing pair once, and no self pair — also when an id is on both
+    sides (re-ingest). Pairs are then put in ``id_a < id_b`` order with
+    the payload swapped alongside, as ``blocked_pairs`` does; the output
+    schema matches ``blocked_pairs``.
 
+    There is no skew split. The new×existing pairs (m·M of them) never had
+    one; only the new×new share (m²) went through ``blocked_pairs``'s
+    bucket combos, at the price of a block-count pre-pass, an explode and
+    three joins per batch. A hot block now skews the ``everyone`` side,
+    which AQE's skew join splits. There is no broadcast hint either: the
+    new batch is small, and once persisted its exact size lets AQE plan
+    the broadcast itself.
+    """
+    # SQL expression strings, one py4j call per select: built from Column
+    # objects, the same plan took ~1,400 py4j round trips (0.2 s) per batch
     payload = [c for c in new_members.columns if c not in (block_col, id_col)]
-    a = new_members.select(
-        F.col(block_col),
-        F.col(id_col).alias("id_a"),
-        *[F.col(c).alias(f"{c}_a") for c in payload],
+    blk, key = _q(block_col), _q(id_col)
+    cols = [blk, key, *map(_q, payload)]
+    everyone = existing_members.selectExpr(*cols, "false AS _new").unionByName(
+        new_members.selectExpr(*cols, "true AS _new")
     )
-    b = existing_members.select(
-        F.col(block_col),
-        F.col(id_col).alias("id_b"),
-        *[F.col(c).alias(f"{c}_b") for c in payload],
+    a = new_members.selectExpr(
+        blk, f"{key} AS id_a", *[f"{_q(c)} AS {_q(c + '_a')}" for c in payload]
     )
-    ne = a.join(b, block_col)
-    # normalize order (id_a < id_b) without losing payload sides
-    ne_ok = ne.where(F.col("id_a") < F.col("id_b"))
-    ne_swap = ne.where(F.col("id_a") > F.col("id_b")).select(
-        F.col(block_col),
-        F.col("id_b").alias("id_a"),
-        F.col("id_a").alias("id_b"),
-        *[c for cc in payload for c in (F.col(f"{cc}_b").alias(f"{cc}_a"), F.col(f"{cc}_a").alias(f"{cc}_b"))],
+    b = everyone.selectExpr(
+        blk, f"{key} AS id_b", "_new", *[f"{_q(c)} AS {_q(c + '_b')}" for c in payload]
     )
-    return nn.unionByName(ne_ok.select(*nn.columns)).unionByName(ne_swap.select(*nn.columns))
+    joined = a.join(b, block_col).where("id_a < id_b OR (NOT _new AND id_a > id_b)")
+
+    def ordered(x: str, y: str) -> str:
+        """``x`` for a pair that arrived as id_a < id_b, else ``y``."""
+        return f"CASE WHEN id_a > id_b THEN {y} ELSE {x} END AS {x}"
+
+    out = [blk, ordered("id_a", "id_b"), ordered("id_b", "id_a")]
+    for c in payload:
+        ca, cb = _q(c + "_a"), _q(c + "_b")
+        out += [ordered(ca, cb), ordered(cb, ca)]
+    return joined.selectExpr(*out)
 
 
 def merge_components(

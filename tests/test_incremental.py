@@ -1,5 +1,7 @@
 """Incremental ER: delta pairs + warm-start component merge ≡ full recompute."""
 
+from collections import Counter
+
 import pyspark.sql.functions as F
 
 from jmdfane_spark.operators.connected_components import connected_components
@@ -69,3 +71,22 @@ def test_delta_pairs_never_regenerates_old_pairs(spark):
             if bk1 == bk2 and id1 < id2 and (id1 in new_ids or id2 in new_ids):
                 want.add((id1, id2))
     assert got == want
+
+
+def _plan_nodes(df):
+    """Node names of the optimized logical plan, one per node of the tree."""
+    names, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return names
+
+
+def test_delta_pairs_is_one_join(spark):
+    """delta_pairs plans one equi-join of the new batch against every
+    member: no block-count pre-pass, no bucket-combo explode (Generate),
+    no second new×existing join."""
+    nodes = Counter(_plan_nodes(delta_pairs(_members(spark, NEW), _members(spark, OLD))))
+    assert nodes["Join"] == 1 and nodes["Generate"] == 0, nodes

@@ -11,6 +11,7 @@ import json
 import os
 import shutil
 import tempfile
+from collections import Counter
 
 import pyspark.sql.functions as F
 from hypothesis import HealthCheck, example, given, settings
@@ -179,6 +180,50 @@ def test_score_cascade_equals_full_pass(spark, rows, raw_w, with_emb, with_tfidf
             key=lambda r: r["id_a"],
         )
         assert got == [r for r in full if r["score"] >= tau], (tau, w)
+
+
+# ids whose Spark string order is not their numeric or alphabetic one
+_DP_IDS = ["v1", "v2", "v9", "v10", "e", "z", "é", "ü"]
+_DP_ROW = st.tuples(st.sampled_from(_DP_IDS), st.sampled_from(["k0", "k1", "k2"]), st.booleans())
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    st.lists(_DP_ROW, max_size=14),
+    st.sampled_from(_DP_IDS),
+    st.sampled_from(["k0", "k1", "k2"]),
+    st.lists(st.sampled_from(_DP_IDS), min_size=1, max_size=3, unique=True),
+    st.lists(st.sampled_from(_DP_IDS), min_size=1, max_size=3, unique=True),
+)
+def test_delta_pairs_matches_brute_force(spark, rows, both_id, both_blk, new_only, old_only):
+    """delta_pairs emits every within-block pair of rows with different ids
+    and at least one new end exactly once, as (id_a < id_b) in Spark string
+    order with each payload on its id's side. Each example holds one id on
+    both sides (a re-ingest), a block of new rows only and a block of
+    existing rows only."""
+    from jmdfane_spark.streaming.incremental import delta_pairs
+
+    rows = set(rows) | {(both_id, both_blk, True), (both_id, both_blk, False)}
+    rows |= {(i, "kn", True) for i in new_only} | {(i, "ko", False) for i in old_only}
+    data = [(blk, i, f"{i}@{blk}@{is_new}", n, is_new)
+            for n, (i, blk, is_new) in enumerate(sorted(rows))]
+    schema = "block_key string, id string, p string, n bigint"
+    new = spark.createDataFrame([d[:4] for d in data if d[4]], schema)
+    old = spark.createDataFrame([d[:4] for d in data if not d[4]], schema)
+
+    want = Counter()
+    for x, y in itertools.combinations(data, 2):
+        if x[0] == y[0] and x[1] != y[1] and (x[4] or y[4]):
+            lo, hi = sorted((x, y), key=lambda d: d[1])
+            want[(lo[0], lo[1], hi[1], lo[2], hi[2], lo[3], hi[3])] += 1
+
+    dp = delta_pairs(new, old)
+    assert dp.columns == ["block_key", "id_a", "id_b", "p_a", "p_b", "n_a", "n_b"]
+    got = Counter(tuple(r) for r in dp.collect())
+    assert all(r[1] < r[2] and r[3].startswith(f"{r[1]}@") and r[4].startswith(f"{r[2]}@")
+               for r in got)
+    assert not any(k[0] == "ko" for k in got)
+    assert got == want
 
 
 def _union_find(verts, edges):
