@@ -22,6 +22,7 @@ from pyspark.sql import Window
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from jmdfane_spark import persist  # noqa: E402
 from jmdfane_spark.functions import similarity as S  # noqa: E402
 from jmdfane_spark.operators import dedup as D  # noqa: E402
 from jmdfane_spark.operators import similarity_search as NN  # noqa: E402
@@ -125,7 +126,8 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: 3-stage ER pipeline on the sf0.001 documents table."""
     files = documents_as_files(spark, "/root/testdata/sf0.001")
     res = run_pipeline(spark, files, threshold=0.80, use_bands=False, use_tfidf=True)
-    return res.labels.select("block_key", "id", "component")
+    # a bare DataFrame goes back, so the registry owns the labels snapshot
+    return persist.register(res.labels).select("block_key", "id", "component")
 
 
 # ---------------------------------------------------------------------------

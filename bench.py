@@ -3,7 +3,9 @@
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>, "pairs_scored": N,
-   "pairs_per_sec": N, "reps": R, "host_steal_pct": p, ...}
+   "pairs_per_sec": N, "reps": R, "host_steal_pct": p,
+   "pipeline_reps": [{wall, stages, cc_iterations, pair_partitions}, ...],
+   "query_rep_secs": {name: [sec, ...]}, ...}
 
 The primary workload is the flagship 3-stage ER pipeline (blocking →
 scoring → CC) — the BASELINE.json throughput metric is candidate pairs
@@ -14,8 +16,13 @@ Noise discipline (r4 VERDICT): a single cold-JVM rep on this host
 whipsaws ±40% with the guest idle (delivered-clock drift measured by
 tools/bench_scaling.py's pure-CPU ceiling brackets). Each query therefore
 runs ``SPARK_GRAFT_BENCH_REPS`` times (default 3) in ONE JVM and reports
-the per-query MEDIAN, with a /proc/stat steal stamp and the raw pipeline
-rep times so a degraded window is visible in the artifact itself.
+the per-query MEDIAN, with a /proc/stat steal stamp and every raw rep
+time (pipeline and queries, the cold rep 1 included) so a degraded window
+is visible in the artifact itself.
+
+Usage: python bench.py
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
+SPARK_GRAFT_BENCH_REPS (default 3), SPARK_GRAFT_CPUS.
 """
 
 from __future__ import annotations
@@ -65,6 +72,7 @@ def main() -> None:
     # this is the pairs-scored throughput workload). Rep 1 includes JVM/
     # codegen warmup; the median of >=3 reps is the reported number.
     pipe_times: list[float] = []
+    pipe_reps: list[dict] = []
     pairs_scored = 0
     files = documents_as_files(spark, sf_dir)
     for _ in range(reps):
@@ -77,11 +85,18 @@ def main() -> None:
         pipe_times.append(round(time.time() - t0, 3))
         pairs_scored = res.metrics["pairs_scored"]
         stage_secs = {k: v for k, v in res.metrics.items() if k.startswith("t_")}
+        pipe_reps.append({
+            "wall": pipe_times[-1],
+            "stages": stage_secs,
+            "cc_iterations": res.metrics.get("cc_iterations"),
+            "pair_partitions": res.metrics.get("pair_partitions"),
+        })
         res.release()  # no cached RDDs carried between reps
 
     timings: dict[str, float] = {"er_pipeline_full": round(statistics.median(pipe_times), 3)}
 
     qs = entrymod.queries()
+    query_reps: dict[str, list[float]] = {}
     for name in HEADLINE:
         q_times = []
         for _ in range(reps):
@@ -89,6 +104,7 @@ def main() -> None:
             qs[name](spark, sf_dir).count()
             q_times.append(time.time() - t0)
             persist.release()
+        query_reps[name] = [round(t, 3) for t in q_times]
         timings[name] = round(statistics.median(q_times), 3)
 
     wall = round(time.time() - total0, 3)
@@ -115,6 +131,8 @@ def main() -> None:
         "reps": reps,
         "pipeline_rep_secs": pipe_times,
         "pipeline_stage_secs": stage_secs,  # last rep (warm)
+        "pipeline_reps": pipe_reps,
+        "query_rep_secs": query_reps,
         "host_steal_pct": steal_pct,
         "bench_wall_sec": wall,
     }

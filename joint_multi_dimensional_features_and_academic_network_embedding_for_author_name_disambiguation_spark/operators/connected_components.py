@@ -71,13 +71,15 @@ DRIVER_MAX_EDGES = 1_000_000
 
 @dataclass
 class CCResult:
+    """``labels`` holds no cache of CC's own when CC finished on the
+    driver or ran with a checkpointer. After hash-min rounds without one
+    it is a single eager localCheckpoint registered with :mod:`..persist`:
+    ``persist.release()`` frees it, and a read after that fails with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+
     labels: DataFrame          # (id, component)
     iterations: int
     metrics: list[dict] = field(default_factory=list)  # per-iteration rows
-    persists: list = field(default_factory=list)  # snapshots still backing `labels`
-    # (superseded snapshots are freed DURING the run; the final one — and
-    # the contraction base — must outlive `labels`, so they are handed to
-    # the caller to unpersist after materializing)
 
 
 def _symmetrize(df: DataFrame, s: str, d: str) -> DataFrame:
@@ -199,6 +201,12 @@ def connected_components(
     The loop ends when a round changes no label. It terminates: every
     other round lowers at least one label in a finite ordered set, and
     pointer jumping makes the round count O(log diameter).
+
+    CC frees every snapshot it takes before it returns. The driver finish
+    and checkpointed runs return labels that read no cache; after
+    hash-min rounds without a checkpointer the labels are one eager
+    localCheckpoint (composed through the contraction map first, if one
+    was taken), owned by the ``persist`` registry.
     """
 
     def _snapshot(name: str, df: DataFrame, eager: bool = False) -> DataFrame:
@@ -251,12 +259,16 @@ def connected_components(
             prefix = "cc_qlabels"
         labels, it = checkpointer.latest_iteration(prefix)
 
-    def _result(labels: DataFrame, persists: list) -> CCResult:
-        # also in the process-wide registry so standalone callers (driver
-        # queries, benches) can bulk-release; double-unpersist is a no-op
-        for _df in persists:
-            _persist.register(_df)
-        return CCResult(labels=labels, iterations=it, metrics=metrics, persists=persists)
+    def _result(labels: DataFrame, *spent: DataFrame) -> CCResult:
+        # `spent`: the snapshots `labels` still reads. Without a
+        # checkpointer they are localCheckpoints, so `labels` is
+        # snapshotted once and registered before they are freed; with one
+        # they are parquet reads and freeing them is a no-op
+        if spent and checkpointer is None:
+            labels = _persist.register(labels.localCheckpoint(eager=True))
+        for df in spent:
+            _persist.unpersist_any(df)
+        return CCResult(labels=labels, iterations=it, metrics=metrics)
 
     # A phase that starts here first tries to finish on the driver; a
     # resumed phase already ran rounds because its edges did not fit.
@@ -266,9 +278,9 @@ def connected_components(
         )
         if final is not None and base_labels is None:
             ident = vertices.select(F.col(id_col).alias("id"), F.col(id_col).alias("component"))
-            return _result(_compose(ident, final, True), [])
-        if final is not None:
-            return _result(_compose(base_labels, final, True), [base_labels])
+            return _result(_compose(ident, final, True))
+        if final is not None:  # resumed, so base_labels is parquet
+            return _result(_compose(base_labels, final, True))
 
     if qedges is None:
         sym = _symmetrize(edges, "id_a", "id_b").persist()
@@ -378,8 +390,7 @@ def connected_components(
             snap = None
             final = _finish_on_driver(qedges.select("src", "dst"))
             if final is not None:
-                _persist.unpersist_any(qedges)
-                return _result(_compose(base_labels, final, True), [base_labels])
+                return _result(_compose(base_labels, final, True), base_labels, qedges)
             sym = _symmetrize(qedges, "src", "dst").persist()
             labels = _identity(sym)
             prefix = "cc_qlabels"
@@ -391,6 +402,5 @@ def connected_components(
 
     _persist.unpersist_any(sym)
     if base_labels is None:
-        return _result(labels, [snap])
-    _persist.unpersist_any(qedges)  # only sym read it
-    return _result(_compose(base_labels, labels, small_v), [snap, base_labels])
+        return _result(labels, snap)
+    return _result(_compose(base_labels, labels, small_v), snap, base_labels, qedges)

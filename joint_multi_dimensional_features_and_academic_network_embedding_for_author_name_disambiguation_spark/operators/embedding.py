@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import persist as _persist
+
 
 def random_walks(
     edges: DataFrame,
@@ -55,6 +57,9 @@ def random_walks(
         src/hin_embedding/meta2vec.py:34-39,127-145). A walk with no
         neighbor of the scheduled type terminates (the path stops growing
         permanently), matching the reference's walk truncation.
+
+    The walks come back as one eager localCheckpoint registered with
+    :mod:`..persist`; every intermediate behind it is already freed.
     """
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     # edge types only matter when a metapath schedules them — otherwise
@@ -98,6 +103,7 @@ def random_walks(
     # metapath graphs a dead walk would otherwise ride (and pay join
     # traffic for) every one of the remaining walk_len−1 steps
     finished = walks.where(F.lit(False)).select("walk_id", "path")
+    snaps = [adj]
 
     denom = float(1 << 30)
     for step in range(1, walk_len):
@@ -136,9 +142,14 @@ def random_walks(
         if step % 5 == 0:
             walks = walks.localCheckpoint()  # bound iterative plan growth
             finished = finished.localCheckpoint()  # union chain grows too
-    adj.unpersist()
-    out = walks.select("walk_id", "path").unionByName(finished)
-    return out.select("walk_id", F.element_at("path", 1).alias("start"), "path")
+            snaps += [walks, finished]
+    out = walks.select("walk_id", "path").unionByName(finished).select(
+        "walk_id", F.element_at("path", 1).alias("start"), "path"
+    )
+    out = _persist.register(out.localCheckpoint(eager=True))
+    for df in snaps:
+        _persist.unpersist_any(df)
+    return out
 
 
 def train_node_embeddings(

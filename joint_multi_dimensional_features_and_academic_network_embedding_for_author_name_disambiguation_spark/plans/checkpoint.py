@@ -41,12 +41,16 @@ class CheckpointManager:
         return self.spark.read.parquet(self._stage_dir(stage))
 
     def write(self, stage: str, df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
-        """Atomically snapshot a stage; returns the re-read (lineage-free) df."""
+        """Atomically snapshot a stage; returns the re-read (lineage-free) df.
+
+        Rebalanced so AQE sizes the files: a snapshot rewritten from itself
+        plus a delta gains no file per rewrite (without native Hadoop, the
+        local file system forks a ``chmod`` per file it creates)."""
         path = self._stage_dir(stage)
         tmp = path + ".tmp"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        w = df.write.mode("overwrite")
+        w = df.hint("rebalance", *(partition_by or [])).write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(tmp)

@@ -25,6 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import persist as _persist
 from ..functions import text as T
 from ..operators import scoring
 from ..operators.connected_components import connected_components
@@ -41,7 +42,12 @@ def _codegen_compiles(spark: SparkSession) -> int:
 
 @dataclass
 class PipelineResult:
-    """``metrics["codegen_compiles"]`` is the number of generated classes
+    """``labels`` is materialized: ``run_pipeline`` takes one eager
+    localCheckpoint of it and then frees every intermediate of the run.
+    The result is the snapshot's only owner; ``persist.release()`` leaves
+    it alone.
+
+    ``metrics["codegen_compiles"]`` is the number of generated classes
     compiled during the ``run_pipeline`` call; a warm rerun of the same
     pipeline should read 0. The count is session-wide, so concurrent jobs
     in the same session add to it. It is exact in local mode; on a cluster
@@ -50,26 +56,12 @@ class PipelineResult:
 
     labels: DataFrame                      # (block_key, id, component, content_sha)
     metrics: dict = field(default_factory=dict)
-    persists: list = field(default_factory=list)
 
     def release(self) -> None:
-        """Free every intermediate still backing ``labels`` — and with it
-        the result itself.
-
-        Call AFTER the labels are materialized (collect/count/write) and
-        will not be read again: the list includes the CC label
-        localCheckpoints, whose lineage is truncated, so a post-release
-        action on ``labels`` fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-        rather than recomputing. Scoped to THIS result only (frames are
-        unregistered, not drained, from the process-wide registry — other
-        live results are untouched).
-        """
-        from .. import persist as _persist
-
-        for df in self.persists:
-            _persist.unpersist_any(df)
-            _persist.unregister(df)
-        self.persists.clear()
+        """Free the labels snapshot. Call once the labels will not be read
+        again: the snapshot has no lineage, so a later action on
+        ``labels`` fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+        _persist.unpersist_any(self.labels)
 
 
 def normalize_files(
@@ -110,8 +102,6 @@ def normalize_files(
         if persists is not None:
             persists.append(base)
         else:
-            from .. import persist as _persist
-
             _persist.register(base)
     return base.select(
         "id", "repo", "path", "commit", "lang", "content_sha", "norm_path", "stem",
@@ -215,7 +205,6 @@ def run_pipeline(
     # behind it is no longer needed by any live plan
     for _df in _staged:
         _df.unpersist()
-    _staged.clear()
     metrics["t_normalize"] = round(_time.time() - _t0, 2)
     _t0 = _time.time()
 
@@ -331,6 +320,7 @@ def run_pipeline(
                 graph, num_walks=emb_walks, walk_len=emb_walk_len, weight_col="w"
             )
             emb = train_node_embeddings(walks, dim=emb_dim)
+            _persist.unpersist_any(walks)  # the fitted vectors do not read it
             wide = wide.join(
                 emb.select(F.col("node").alias("id_a"), F.col("vec").alias("emb_vec_a")),
                 "id_a",
@@ -362,25 +352,16 @@ def run_pipeline(
         scored = scoring.score_pairs(
             wide, weights=weights, prune_below=prune
         )
-        keep = ["block_key", "id_a", "id_b", "content_sha_a", "content_sha_b",
-                "token_jaccard", "shingle_jaccard", "path_sim", "tfidf_cosine",
-                "emb_cosine", "score"]
+        keep = ["block_key", "id_a", "id_b", "token_jaccard", "shingle_jaccard",
+                "path_sim", "tfidf_cosine", "emb_cosine", "score"]
         return scored.select(*[c for c in keep if c in scored.columns])
 
     # persist: scored (the edge table when pruned, every pair otherwise)
     # feeds both the metrics count and the CC edge input — without it the
     # whole scoring stage executes twice. `edges` stays a filter at τ: with
     # repair_outliers the table holds pairs down to repair_min_score.
-    # Non-checkpointed runs drop the two sha columns from the cache: no
-    # downstream branch (edge filter, adaptive, per-block solvers, repair)
-    # reads them, and at sf0.1 they are ~60% of the cached bytes
-    # (2×64-char strings per pair); the checkpointed snapshot keeps the
-    # full documented schema.
     _label("stage2 scoring")
-    if ck:
-        scored = ck.stage("scored", build_scored)
-    else:
-        scored = build_scored().drop("content_sha_a", "content_sha_b").persist()
+    scored = ck.stage("scored", build_scored) if ck else build_scored().persist()
     if adaptive:
         edges = scoring.adaptive_threshold(scored, base=threshold)
     else:
@@ -388,7 +369,6 @@ def run_pipeline(
     n_scored = scored.count()
     for _df in _scoring_hold:
         _df.unpersist()
-    _scoring_hold.clear()
     metrics["pairs_scored"] = n_pairs
     metrics["edges"] = n_scored
     metrics["t_scoring"] = round(_time.time() - _t0, 2)
@@ -396,15 +376,17 @@ def run_pipeline(
     if ck:
         ck.log_metric(stage="scoring", pairs_scored=n_pairs, edges=n_scored)
 
-    def _result(labels: DataFrame, extra_persists: list) -> PipelineResult:
-        # persists: intermediates the returned (lazy) labels still read
-        # from; handed to PipelineResult.release() so callers free them
-        # after materializing. With a checkpoint manager, `scored` is a
-        # parquet read, not a persist.
-        persists = [members, pairs] + ([] if ck else [scored]) + extra_persists
-        metrics["codegen_compiles"] = _codegen_compiles(spark) - compiles0
+    def _result(labels: DataFrame, *spent: DataFrame) -> PipelineResult:
+        # materialize the labels once, then free every intermediate they
+        # were built from; nothing is freed before the snapshot exists.
+        # With a checkpoint manager `scored` is a parquet read, and freeing
+        # it is a no-op.
         spark.sparkContext.setJobDescription(None)
-        return PipelineResult(labels=labels, metrics=metrics, persists=persists)
+        labels = labels.localCheckpoint(eager=True)
+        for df in (members, pairs, scored, *spent):
+            _persist.unpersist_any(df)
+        metrics["codegen_compiles"] = _codegen_compiles(spark) - compiles0
+        return PipelineResult(labels=labels, metrics=metrics)
 
     # ---- stage 3: transitive clustering --------------------------------------
     vertices = members.select("id", "block_key", "content_sha")
@@ -466,7 +448,6 @@ def run_pipeline(
             labels = _repair(
                 labels, scored, threshold if repair_min_score is None else repair_min_score
             )
-        p2.unpersist()
         if ck:
             ck.log_metric(
                 stage="cluster",
@@ -474,7 +455,7 @@ def run_pipeline(
                 cross_block_pairs_dropped=n_cross_dropped,
             )
             ck.flush_metrics()
-        return _result(labels, [])
+        return _result(labels, p2)
 
     _label("stage3 cc")
     cc = connected_components(
@@ -494,7 +475,7 @@ def run_pipeline(
         labels = _repair(
             labels, scored, threshold if repair_min_score is None else repair_min_score
         )
-    return _result(labels, cc.persists)
+    return _result(labels, cc.labels)
 
 
 def _repair(labels: DataFrame, scored: DataFrame, min_score: float) -> DataFrame:

@@ -22,6 +22,14 @@ def test_stage_compute_or_resume(spark, tmp_path):
     assert ck.exists("s1")
 
 
+def test_small_snapshot_is_one_file(spark, tmp_path):
+    ck = CheckpointManager(spark, str(tmp_path / "ck"))
+    out = ck.write("s1", spark.range(0, 100, numPartitions=4))
+    parts = [f for f in os.listdir(tmp_path / "ck" / "s1") if f.endswith(".parquet")]
+    assert len(parts) == 1
+    assert out.count() == 100
+
+
 def test_incomplete_snapshot_is_recomputed(spark, tmp_path):
     root = str(tmp_path / "ck")
     ck = CheckpointManager(spark, root)

@@ -149,12 +149,21 @@ def test_char_bag_distance(spark):
     assert got == [0, 2, 6, 2, 2]
 
 
-def test_connected_components_contraction_long_chain(spark, monkeypatch):
+def test_connected_components_contraction_long_chain(spark, monkeypatch, tmp_path):
     """Forced edge contraction (contract_min_changed=0) must reach the
     same fixpoint as the default gate (which never contracts a graph this
     small) on a diameter-20 chain — the worst case for hash-min — and
     still label every vertex with the chain's minimum id. The driver
-    finish is off, so both runs take the hash-min rounds."""
+    finish is off, so both runs take the hash-min rounds, on the quotient
+    too. CC frees its own snapshots: without a checkpointer only the
+    registered labels snapshot outlives the call, and with one nothing
+    does."""
+    from jmdfane_spark import persist
+    from jmdfane_spark.plans.checkpoint import CheckpointManager
+
+    def live_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
     monkeypatch.setattr(cc_mod, "DRIVER_MAX_EDGES", 0)
     n = 21
     ids = [f"v{i:02d}" for i in range(n)]
@@ -162,11 +171,23 @@ def test_connected_components_contraction_long_chain(spark, monkeypatch):
     verts = sorted({v for e in edges for v in e} | {"iso"})
     vdf = spark.createDataFrame([(v,) for v in verts], "id string")
     edf = spark.createDataFrame(edges, "id_a string, id_b string")
+    persist.release()
+    before = live_ids()
     contracted = connected_components(vdf, edf, contract_min_changed=0)
-    plain = connected_components(vdf, edf)
+    assert len(live_ids() - before) == 1
     got_c = {r.id: r.component for r in contracted.labels.collect()}
+    persist.release()
+    assert live_ids() <= before
+    ckd = connected_components(
+        vdf, edf, checkpointer=CheckpointManager(spark, str(tmp_path)), contract_min_changed=0
+    )
+    assert live_ids() <= before
+    got_k = {r.id: r.component for r in ckd.labels.collect()}
+    plain = connected_components(vdf, edf)
     got_p = {r.id: r.component for r in plain.labels.collect()}
-    assert got_c == got_p
+    persist.release()
+    assert got_c == got_p == got_k
+    assert any(m["phase"] == "quotient" for m in ckd.metrics)
     assert all(got_c[v] == "v00" for v in ids)
     assert got_c["x1"] == got_c["x2"] == "x1" and got_c["iso"] == "iso"
     assert any(m["phase"] == "quotient" for m in contracted.metrics)

@@ -161,26 +161,48 @@ def test_repair_outliers_option(spark, fixture_dfs):
     assert n_low <= n_base
     assert low.labels.count() == base.labels.count()  # no rows lost
 
-def test_no_leaked_persists(spark, fixture_dfs):
-    """r4 VERDICT cache hygiene: after materializing the result and calling
-    release(), the run leaves NO cached RDDs behind (snapshot-relative —
-    the session is shared with other tests)."""
+def test_no_leaked_persists(spark, fixture_dfs, monkeypatch):
+    """r4 VERDICT cache hygiene, and one owner per persisted frame: when
+    run_pipeline returns, its labels snapshot is the only cached RDD it
+    leaves (snapshot-relative: the session is shared with other tests).
+    The labels survive persist.release(), and res.release() frees them.
+    Checked on the driver CC finish, on the hash-min rounds
+    (DRIVER_MAX_EDGES = 0) and with the GHAC clusterer."""
     from jmdfane_spark import persist
+    from jmdfane_spark.operators import connected_components as cc_mod
     from jmdfane_spark.operators.dedup import minhash_lsh_pairs
 
     def live_ids():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    def partition(rows):
+        comps = {}
+        for r in rows:
+            comps.setdefault(r["component"], set()).add(r["id"])
+        return sorted(sorted(c) for c in comps.values())
 
     spark.catalog.clearCache()
     persist.release()
     before = live_ids()
 
     files, _, _ = fixture_dfs
-    res = run_pipeline(spark, files, use_bands=True, use_tfidf=True)
-    res.labels.count()
-    assert len(live_ids()) > len(before)  # persists were in use mid-run
-    res.release()
-    assert live_ids() <= before, "pipeline leaked persisted RDDs"
+    parts = {}
+    for name, bound, clusterer in [
+        ("driver", cc_mod.DRIVER_MAX_EDGES, "cc"),
+        ("rounds", 0, "cc"),
+        ("ghac", cc_mod.DRIVER_MAX_EDGES, "ghac"),
+    ]:
+        monkeypatch.setattr(cc_mod, "DRIVER_MAX_EDGES", bound)
+        res = run_pipeline(spark, files, use_bands=True, use_tfidf=True, clusterer=clusterer)
+        leaked = live_ids() - before
+        assert len(leaked) <= 1, (name, sorted(leaked))
+        got = partition(res.labels.collect())
+        persist.release()
+        parts[name] = partition(res.labels.collect())
+        assert parts[name] == got, name
+        res.release()
+        assert live_ids() <= before, (name, "pipeline leaked persisted RDDs")
+    assert parts["driver"] == parts["rounds"]
 
     # operator-registry path (pairs_from_keys / dedup barriers)
     docs = files.select(F.concat_ws(":", "repo", "path").alias("id"), F.col("content").alias("text"))
