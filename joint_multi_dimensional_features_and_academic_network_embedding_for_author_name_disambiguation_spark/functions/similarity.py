@@ -9,6 +9,11 @@ Reference semantics re-expressed with built-ins:
 
 All functions return DoubleType columns and are null-safe (empty arrays →
 0.0), so they can sit directly in the pair-scoring select list.
+
+``jaccard_sets``, ``levenshtein_ratio`` and ``cosine`` are defined once,
+as SQL text (``*_sql``); the Column helper parses that text. Built from
+Column objects, one such kernel took 114-345 py4j round trips (14-98 ms
+on a 4-CPU host) to build; parsed from text it takes 3.
 """
 
 from __future__ import annotations
@@ -28,16 +33,30 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, F.round(inter / union, 9)).otherwise(F.lit(0.0))
 
 
-def jaccard_sets(a: Column, b: Column) -> Column:
+def sql_of(c: Column | str) -> str:
+    """SQL text of a kernel argument. A string is taken as SQL text (a
+    column name, say); a Column prints as its SQL, which parses back for
+    column references (``col(name)``) and function calls, not for infix
+    operators or names that need quoting: pass those as SQL text."""
+    return c if isinstance(c, str) else c._jc.node().sql()
+
+
+def jaccard_sets_sql(a: str, b: str) -> str:
+    """SQL text of :func:`jaccard_sets` over the SQL expressions ``a``, ``b``."""
+    inter = f"CAST(size(array_intersect({a}, {b})) AS DOUBLE)"
+    union = f"(CAST((size({a}) + size({b})) AS DOUBLE) - {inter})"
+    return f"CASE WHEN ({union} > 0) THEN round(({inter} / {union}), 9) ELSE 0.0D END"
+
+
+def jaccard_sets(a: Column | str, b: Column | str) -> Column:
     """Jaccard for arrays KNOWN to be distinct (sets): |a∪b| computed as
     |a|+|b|−|a∩b| instead of materializing array_union — skips one
     hash-set build per pair, measured 1.5-1.7× faster on the 14.5M-pair
     scoring workload with identical results. Precondition: both arrays
     are deduplicated (normalize_files and word_ngrams emit
-    array_distinct output); for arbitrary arrays use ``jaccard``."""
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = (F.size(a) + F.size(b)).cast("double") - inter
-    return F.when(union > 0, F.round(inter / union, 9)).otherwise(F.lit(0.0))
+    array_distinct output); for arbitrary arrays use ``jaccard``.
+    Arguments as in :func:`sql_of`."""
+    return F.expr(jaccard_sets_sql(sql_of(a), sql_of(b)))
 
 
 def tanimoto(a: Column, b: Column) -> Column:
@@ -52,13 +71,36 @@ def tanimoto(a: Column, b: Column) -> Column:
     return F.when(denom > 0, F.round(inter / denom, 9)).otherwise(F.lit(0.0))
 
 
-def levenshtein_ratio(a: Column, b: Column) -> Column:
-    """1 - lev(a,b)/max(len) — generate_adj.py:70-71, built-in edit distance."""
-    mx = F.greatest(F.length(a), F.length(b)).cast("double")
-    return F.when(mx > 0, F.round(1.0 - F.levenshtein(a, b) / mx, 9)).otherwise(F.lit(1.0))
+def levenshtein_ratio_sql(a: str, b: str) -> str:
+    """SQL text of :func:`levenshtein_ratio` over the SQL expressions ``a``, ``b``."""
+    mx = f"CAST(greatest(length({a}), length({b})) AS DOUBLE)"
+    return (
+        f"CASE WHEN ({mx} > 0) THEN round((1.0D - (levenshtein({a}, {b}) / {mx})), 9) "
+        "ELSE 1.0D END"
+    )
 
 
-def cosine(a: Column, b: Column) -> Column:
+def levenshtein_ratio(a: Column | str, b: Column | str) -> Column:
+    """1 - lev(a,b)/max(len) — generate_adj.py:70-71, built-in edit distance.
+    Arguments as in :func:`sql_of`."""
+    return F.expr(levenshtein_ratio_sql(sql_of(a), sql_of(b)))
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """SQL text of :func:`cosine` over the SQL expressions ``a``, ``b``."""
+    dot = (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (CAST(x AS DOUBLE) * CAST(y AS DOUBLE))), "
+        "0.0D, (x, y) -> (x + y))"
+    )
+
+    def norm(v: str) -> str:
+        return f"sqrt(aggregate({v}, 0.0D, (x, y) -> (x + (CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))))"
+
+    na, nb = norm(a), norm(b)
+    return f"CASE WHEN (({na} > 0) AND ({nb} > 0)) THEN ({dot} / ({na} * {nb})) ELSE 0.0D END"
+
+
+def cosine(a: Column | str, b: Column | str) -> Column:
     """Cosine over ArrayType(Float/Double) columns, pure array math.
 
     dot/(‖a‖·‖b‖) via zip_with + aggregate. Higher-order functions run on
@@ -68,15 +110,9 @@ def cosine(a: Column, b: Column) -> Column:
     wrong for an ungated brute-force pair stream: 200k pairs × 64 dims ×
     3 aggregates measured ~200 s serial. For bulk dense cosine use
     :func:`cosine_batch` (one Arrow transfer + numpy einsum per batch).
+    Arguments as in :func:`sql_of`.
     """
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
+    return F.expr(cosine_sql(sql_of(a), sql_of(b)))
 
 
 def l2_norm(a: Column) -> Column:

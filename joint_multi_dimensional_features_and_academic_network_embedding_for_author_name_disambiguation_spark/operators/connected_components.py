@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import persist as _persist
+from ..session import arrow_at_most
 
 # When |V| ≤ this bound, every edge×label join hash-broadcasts the label
 # side. Both sides are snapshots (LogicalRDD / parquet re-reads) whose
@@ -230,10 +231,10 @@ def connected_components(
         else:
             if DRIVER_MAX_EDGES <= 0:
                 return None
-            collected = pairs.limit(DRIVER_MAX_EDGES + 1).toArrow()
-            m = collected.num_rows
-            if m > DRIVER_MAX_EDGES:
+            collected = arrow_at_most(pairs, DRIVER_MAX_EDGES)
+            if collected is None:
                 return None
+            m = collected.num_rows
             cmap = pairs.sparkSession.createDataFrame(_solve_on_driver(collected))
             if checkpointer is not None:
                 cmap = checkpointer.write("cc_driver", cmap)

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import persist as _persist
+
 
 def laplacian_smooth(
     features: DataFrame,
@@ -40,6 +42,10 @@ def laplacian_smooth(
     L̂ = I − D^-1/2 (A+I) D^-1/2 restricted to the neighbor sum. Vectors
     are ArrayType columns; the elementwise sum runs via posexplode →
     groupBy(node, pos) → sum — pure shuffles, no N×N matrices.
+
+    Each round is cut by an eager localCheckpoint that frees the round
+    before it. With ``rounds`` ≥ 1 the result reads the last one, which is
+    registered with :mod:`..persist`: ``persist.release()`` frees it.
     """
     w = F.col(weight_col) if weight_col else F.lit(1.0)
     sym = (
@@ -59,6 +65,7 @@ def laplacian_smooth(
     )
 
     x = features.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    snap = None  # the previous round's snapshot, freed once superseded
     for _ in range(rounds):
         msg = (
             norm.join(x.select(F.col("id").alias("src"), F.col("vec").alias("_sv")), "src")
@@ -82,7 +89,12 @@ def laplacian_smooth(
             )
             .localCheckpoint()  # cut lineage per round (iterative plan growth)
         )
+        if snap is not None:
+            _persist.unpersist_any(snap)
+        snap = x
     norm.unpersist()
+    if snap is not None:
+        _persist.register(snap)
     return x.select(F.col("id").alias(id_col), F.col("vec").alias(vec_col))
 
 

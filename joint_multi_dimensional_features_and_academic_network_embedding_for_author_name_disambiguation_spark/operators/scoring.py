@@ -120,8 +120,21 @@ def tfidf_features(
     )
 
 
+def tfidf_cosine_sql(map_a: str, norm_a: str, map_b: str, norm_b: str) -> str:
+    """SQL text of :func:`tfidf_cosine_jvm` over the SQL expressions given."""
+    prod = (
+        f"map_zip_with({map_a}, {map_b}, (x, y, z) -> CASE WHEN ((y IS NOT NULL) AND "
+        "(z IS NOT NULL)) THEN (CAST(y AS DOUBLE) * CAST(z AS DOUBLE)) ELSE 0.0D END)"
+    )
+    dot = f"aggregate(map_values({prod}), 0.0D, (x, y) -> (x + y))"
+    return (
+        f"CASE WHEN (({norm_a} > 0) AND ({norm_b} > 0)) "
+        f"THEN ({dot} / ({norm_a} * {norm_b})) ELSE 0.0D END"
+    )
+
+
 def tfidf_cosine_jvm(
-    map_a: Column, norm_a: Column, map_b: Column, norm_b: Column
+    map_a: Column | str, norm_a: Column | str, map_b: Column | str, norm_b: Column | str
 ) -> Column:
     """Sparse cosine, pure JVM, via ONE hash-merged map_zip_with pass.
 
@@ -131,16 +144,9 @@ def tfidf_cosine_jvm(
     the 14.5M-pair workload. map_zip_with builds one hash index over the
     key union per pair (O(n+m)) and multiplies aligned values — 44.7s,
     identical results. Reads only (map, norm) per side, so the pipeline
-    can drop the idx/val arrays from the pair payload entirely."""
-    prod = F.map_zip_with(
-        map_a,
-        map_b,
-        lambda k, x, y: F.when(
-            x.isNotNull() & y.isNotNull(), x.cast("double") * y.cast("double")
-        ).otherwise(F.lit(0.0)),
-    )
-    dot = F.aggregate(F.map_values(prod), F.lit(0.0), lambda acc, v: acc + v)
-    return F.when((norm_a > 0) & (norm_b > 0), dot / (norm_a * norm_b)).otherwise(F.lit(0.0))
+    can drop the idx/val arrays from the pair payload entirely.
+    Arguments as in ``similarity.sql_of``."""
+    return F.expr(tfidf_cosine_sql(*map(S.sql_of, (map_a, norm_a, map_b, norm_b))))
 
 
 @pandas_udf(DoubleType())
@@ -214,20 +220,25 @@ def score_pairs(
     w = dict(weights or CHANNEL_WEIGHTS)
     has_tfidf = "tfidf_map_a" in pairs.columns
     has_emb = "emb_cosine" in w
+    # Every expression is SQL text: one py4j call per where/selectExpr.
+    # Built from Column objects, the same plan took 1,200-1,600 py4j round
+    # trips (0.15-0.21 s) per ingest batch, 43 (0.04-0.05 s) this way. The
+    # kernels are the text their Column helpers parse (``S.*_sql``).
     # tokens/shingles arrive deduplicated from normalize_files/word_ngrams
     # → the set-specialized Jaccard (no array_union build) is exact here
-    tok_expr = S.jaccard_sets(F.col("tokens_a"), F.col("tokens_b"))
+    tok_expr = S.jaccard_sets_sql("tokens_a", "tokens_b")
+    shingle_expr = S.jaccard_sets_sql("shingles_a", "shingles_b")
     # path channel: Levenshtein ratio (default, pure JVM) or Jaro-Winkler
     # (the north_rule's other named path metric; Arrow-batched UDF with
-    # DuckDB-exact byte semantics). Both in [0,1], null → 0.0 for "jw".
+    # DuckDB-exact byte semantics, so a Column: SQL text cannot name it).
+    # Both in [0,1], null → 0.0 for "jw".
     if path_sim_impl == "jw":
         path_expr = F.coalesce(
             S.jaro_winkler(F.col("norm_path_a"), F.col("norm_path_b")), F.lit(0.0)
         )
     else:
-        path_expr = S.levenshtein_ratio(F.col("norm_path_a"), F.col("norm_path_b"))
+        path_expr = S.levenshtein_ratio_sql("norm_path_a", "norm_path_b")
 
-    shingle_expr = S.jaccard_sets(F.col("shingles_a"), F.col("shingles_b"))
     if has_emb:
         # network-embedding channel (G4→F6); nodes absent from the
         # embedding table (no graph edges / OOV) EXCLUDE the channel and
@@ -238,41 +249,38 @@ def score_pairs(
         # the unbiased deterministic analogue of the reference's OOV
         # idiom (F11). emb_cosine is NULL on OOV rows — honest output.
         if "emb_vec_a" in pairs.columns:
-            emb_expr = F.when(
-                F.col("emb_vec_a").isNotNull() & F.col("emb_vec_b").isNotNull(),
-                S.cosine(F.col("emb_vec_a"), F.col("emb_vec_b")),
+            emb_expr = (
+                "CASE WHEN ((emb_vec_a IS NOT NULL) AND (emb_vec_b IS NOT NULL)) "
+                f"THEN {S.cosine_sql('emb_vec_a', 'emb_vec_b')} END"
             )
         else:
-            emb_expr = F.lit(None).cast("double")
+            emb_expr = "CAST(NULL AS DOUBLE)"
         # renormalization denominator for OOV rows; w_emb == 1 would be a
         # degenerate single-channel config — floor the denominator
         oov_denom = max(1.0 - w["emb_cosine"], 1e-9)
     if has_tfidf:
-        tfidf_expr = tfidf_cosine_jvm(
-            F.col("tfidf_map_a"), F.col("tfidf_norm_a"),
-            F.col("tfidf_map_b"), F.col("tfidf_norm_b"),
-        )
+        tfidf_expr = tfidf_cosine_sql("tfidf_map_a", "tfidf_norm_a", "tfidf_map_b", "tfidf_norm_b")
     else:
-        tfidf_expr = F.col("token_jaccard")
+        tfidf_expr = "token_jaccard"
 
-    fused: Column = sum(
-        (F.lit(wt) * F.col(ch) for ch, wt in w.items() if ch != "emb_cosine"),
-        F.lit(0.0),
-    )
+    fused = "0.0D"
+    for ch, wt in w.items():
+        if ch != "emb_cosine":
+            fused = f"({fused} + ({_d(wt)} * {ch}))"
     if has_emb:
-        fused = F.when(
-            F.col("emb_cosine").isNotNull(),
-            fused + F.lit(w["emb_cosine"]) * F.col("emb_cosine"),
-        ).otherwise(fused / F.lit(oov_denom))
-    score = F.round(fused, 9)
+        fused = (
+            f"CASE WHEN (emb_cosine IS NOT NULL) THEN ({fused} + ({_d(w['emb_cosine'])} * emb_cosine)) "
+            f"ELSE ({fused} / {_d(oov_denom)}) END"
+        )
+    score = F.expr(f"round({fused}, 9)")
 
     if prune_below is None:
-        out = pairs.withColumn("token_jaccard", tok_expr)
-        out = out.withColumn("path_sim", path_expr)
-        out = out.withColumn("shingle_jaccard", shingle_expr)
-        out = out.withColumn("tfidf_cosine", tfidf_expr)
+        out = pairs.withColumn("token_jaccard", F.expr(tok_expr))
+        out = out.withColumn("path_sim", _col(path_expr))
+        out = out.withColumn("shingle_jaccard", F.expr(shingle_expr))
+        out = out.withColumn("tfidf_cosine", F.expr(tfidf_expr))
         if has_emb:
-            out = out.withColumn("emb_cosine", emb_expr)
+            out = out.withColumn("emb_cosine", F.expr(emb_expr))
         return out.withColumn("score", score)
 
     # ---- tiered cascade. Every ub is a true upper bound of the fused
@@ -284,40 +292,50 @@ def score_pairs(
     # their size-ratio bounds are not, and the bound sums its terms in
     # another order. Together that is < 1e-9 + float error.
     EPS = 2e-9
-    thr = prune_below - EPS
-    w_t, w_p = w["token_jaccard"], w["path_sim"]
-    w_s, w_f = w["shingle_jaccard"], w["tfidf_cosine"]
-    w_e = w["emb_cosine"] if has_emb else 0.0
-    na = F.coalesce(F.size(F.col("tokens_a")), F.lit(0))
-    nb = F.coalesce(F.size(F.col("tokens_b")), F.lit(0))
-    sa = F.coalesce(F.size(F.col("shingles_a")), F.lit(0))
-    sb = F.coalesce(F.size(F.col("shingles_b")), F.lit(0))
+    thr = _d(prune_below - EPS)
+    w_t, w_p = _d(w["token_jaccard"]), _d(w["path_sim"])
+    w_s = _d(w["shingle_jaccard"])
+    w_fe = _d(w["tfidf_cosine"] + (w["emb_cosine"] if has_emb else 0.0))
     # token_jaccard ≤ min|T|/max|T| (inter ≤ min, union ≥ max); same for
     # shingles. O(1) arithmetic on array lengths — no per-element work.
-    r_tok = F.when(
-        F.greatest(na, nb) > 0, F.least(na, nb).cast("double") / F.greatest(na, nb)
-    ).otherwise(F.lit(0.0))
-    r_sh = F.when(
-        F.greatest(sa, sb) > 0, F.least(sa, sb).cast("double") / F.greatest(sa, sb)
-    ).otherwise(F.lit(0.0))
+    r_tok = _size_ratio_sql("tokens_a", "tokens_b")
+    r_sh = _size_ratio_sql("shingles_a", "shingles_b")
 
     # tier 0: sizes only — gates the intersects AND the edit distance
-    out = pairs.where(w_t * r_tok + w_p + w_s * r_sh + (w_f + w_e) >= thr)
+    out = pairs.where(f"((((({r_tok} * {w_t}) + {w_p}) + ({r_sh} * {w_s})) + {w_fe}) >= {thr})")
     out = _bind(out, token_jaccard=tok_expr, path_sim=path_expr)
-    cheap_part = w_t * F.col("token_jaccard") + w_p * F.col("path_sim")
+    cheap_part = f"((token_jaccard * {w_t}) + (path_sim * {w_p}))"
     # tier 1: exact cheap channels, shingle still bounded by its size ratio
-    out = out.where(cheap_part + w_s * r_sh + (w_f + w_e) >= thr)
+    out = out.where(f"((({cheap_part} + ({r_sh} * {w_s})) + {w_fe}) >= {thr})")
     out = _bind(out, shingle_jaccard=shingle_expr)
     # tier 2: exact shingle — only now pay for TF-IDF (and embedding)
-    out = out.where(cheap_part + w_s * F.col("shingle_jaccard") + (w_f + w_e) >= thr)
+    out = out.where(f"((({cheap_part} + (shingle_jaccard * {w_s})) + {w_fe}) >= {thr})")
     late = {"tfidf_cosine": tfidf_expr}
     if has_emb:
         late["emb_cosine"] = emb_expr
     out = _bind(out, **late)
-    return out.withColumn("score", score).where(F.col("score") >= prune_below)
+    return out.withColumn("score", score).where(f"(score >= {_d(prune_below)})")
 
 
-def _bind(df: DataFrame, **cols: Column) -> DataFrame:
+def _d(x: float) -> str:
+    """``x`` as a SQL double literal (a bare ``0.35`` parses as a decimal)."""
+    return repr(float(x)).upper() + "D"
+
+
+def _col(expr: str | Column) -> Column:
+    return F.expr(expr) if isinstance(expr, str) else expr
+
+
+def _size_ratio_sql(a: str, b: str) -> str:
+    """min(|a|, |b|) / max(|a|, |b|), 0 when both are empty or NULL."""
+    na, nb = f"coalesce(size({a}), 0)", f"coalesce(size({b}), 0)"
+    return (
+        f"CASE WHEN (greatest({na}, {nb}) > 0) "
+        f"THEN (CAST(least({na}, {nb}) AS DOUBLE) / greatest({na}, {nb})) ELSE 0.0D END"
+    )
+
+
+def _bind(df: DataFrame, **cols: str | Column) -> DataFrame:
     """Append ``cols`` to ``df`` behind a Generate (inline of a one-struct
     array), so each expression is evaluated once per row.
 
@@ -325,9 +343,14 @@ def _bind(df: DataFrame, **cols: Column) -> DataFrame:
     inlined, so a kernel bound by ``withColumn`` would run again inside
     each later tier predicate (and inside a caller's ``score`` filter).
     Spark does not push a predicate on a generator's output below the
-    Generate, which pins each tier's kernels to their own operator."""
+    Generate, which pins each tier's kernels to their own operator.
+    Columns are SQL text, bound in one ``selectExpr``; a ``Column`` (the
+    Jaro-Winkler UDF) makes the whole struct a Column."""
+    if all(isinstance(c, str) for c in cols.values()):
+        fields = ", ".join(f"{c} AS {n}" for n, c in cols.items())
+        return df.selectExpr("*", f"inline(array(struct({fields})))")
     return df.select(
-        "*", F.inline(F.array(F.struct(*[c.alias(n) for n, c in cols.items()])))
+        "*", F.inline(F.array(F.struct(*[_col(c).alias(n) for n, c in cols.items()])))
     )
 
 

@@ -8,8 +8,10 @@ local[N] and on a multi-executor cluster via ``spark-submit --py-files``.
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
 # cgroup v2, then v1: the memory limit of the container this process runs in
 CGROUP_MEMORY_LIMITS = (
@@ -139,3 +141,41 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
+_LIMIT_PUSH_DOWN = "org.apache.spark.sql.catalyst.optimizer.LimitPushDown"
+# serializes arrow_at_most's set/restore of the session-wide rule list
+_EXCLUDED_RULES_LOCK = threading.Lock()
+
+
+def arrow_at_most(df: DataFrame, n: int) -> pa.Table | None:
+    """``df`` as an Arrow table when it has at most ``n`` rows, else None.
+
+    One job: ``df.limit(n + 1).toArrow()``, planned with LimitPushDown off.
+    Pushed into a union's branches or an outer join's kept side, the limit
+    is compiled into those codegen stages under a counter whose name
+    (``_limit_counter_<k>``) comes from a JVM-wide sequence, so every such
+    query compiles new classes (2 per ingest micro-batch when CC collected
+    a union of seed and delta edges). Kept on top, it is a CollectLimit,
+    which is not generated code.
+
+    The rule list is session-wide conf: a query that another thread plans
+    on the same session while the collect runs is optimized without
+    LimitPushDown too (same result, possibly a slower plan). Calls in one
+    process are serialized, so overlapping calls cannot leave the rule
+    off; the function assumes that nothing else sets
+    ``spark.sql.optimizer.excludedRules`` on the session meanwhile.
+    """
+    conf = df.sparkSession.conf
+    with _EXCLUDED_RULES_LOCK:
+        before = conf.get(_EXCLUDED_RULES, None)
+        conf.set(_EXCLUDED_RULES, ",".join(filter(None, (before, _LIMIT_PUSH_DOWN))))
+        try:
+            table = df.limit(n + 1).toArrow()
+        finally:
+            if before is None:
+                conf.unset(_EXCLUDED_RULES)
+            else:
+                conf.set(_EXCLUDED_RULES, before)
+    return table if table.num_rows <= n else None

@@ -4,6 +4,7 @@ import os
 
 from jmdfane_spark.operators import connected_components as cc_mod
 from jmdfane_spark.operators.connected_components import connected_components
+from jmdfane_spark.plans import checkpoint as ck_mod
 from jmdfane_spark.plans.checkpoint import CheckpointManager
 
 
@@ -22,12 +23,43 @@ def test_stage_compute_or_resume(spark, tmp_path):
     assert ck.exists("s1")
 
 
-def test_small_snapshot_is_one_file(spark, tmp_path):
+def test_small_snapshot_is_one_file(spark, tmp_path, monkeypatch):
+    # the pyarrow path writes one file; the Spark path rebalances into one
+    for bound in (ck_mod.DRIVER_MAX_ROWS, 0):
+        with monkeypatch.context() as mp:
+            mp.setattr(ck_mod, "DRIVER_MAX_ROWS", bound)
+            ck = CheckpointManager(spark, str(tmp_path / f"ck{bound}"))
+            out = ck.write("s1", spark.range(0, 100, numPartitions=4))
+            parts = [f for f in os.listdir(tmp_path / f"ck{bound}" / "s1") if f.endswith(".parquet")]
+            assert len(parts) == 1, bound
+            assert out.count() == 100
+
+
+def test_write_above_the_bound_runs_the_plan_once(spark, tmp_path, monkeypatch):
+    """Above DRIVER_MAX_ROWS the probe's rows are not used: Spark's write
+    reads the cache the probe filled instead of running the frame's plan
+    again, and write() frees that cache. A Python UDF logs each row it
+    evaluates to a file (an accumulator misses the probe's rows: its
+    tasks stop reading the UDF's output early)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    log = str(tmp_path / "evaluated")
+
+    @F.udf(LongType())
+    def tally(v):
+        with open(log, "a") as f:
+            f.write(f"{v}\n")
+        return v
+
+    monkeypatch.setattr(ck_mod, "DRIVER_MAX_ROWS", 10)
     ck = CheckpointManager(spark, str(tmp_path / "ck"))
-    out = ck.write("s1", spark.range(0, 100, numPartitions=4))
-    parts = [f for f in os.listdir(tmp_path / "ck" / "s1") if f.endswith(".parquet")]
-    assert len(parts) == 1
-    assert out.count() == 100
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    out = ck.write("s1", spark.range(0, 200, numPartitions=4).select(tally("id").alias("id")))
+    with open(log) as f:
+        assert len(f.read().split()) == 200
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+    assert out.count() == 200
 
 
 def test_incomplete_snapshot_is_recomputed(spark, tmp_path):
@@ -123,3 +155,58 @@ def test_cc_checkpointed_contraction_kill_resume(spark, tmp_path, monkeypatch):
     # and the checkpointed answer matches the non-checkpointed one
     r3 = connected_components(vdf, edf, contract_min_changed=0)
     assert {r.id: r.component for r in r3.labels.collect()} == want
+
+
+def _typed_frame(spark):
+    import datetime
+    from decimal import Decimal
+
+    schema = (
+        "id bigint, toks array<bigint>, tf map<bigint,double>, ts timestamp, "
+        "amount decimal(12,3), flag tinyint, meta struct<name:string,ids:array<int>>"
+    )
+    rows = [
+        (1, [3, 1, 2], {7: 0.5, 9: 1.25}, datetime.datetime(2024, 2, 29, 12, 30, 1, 250),
+         Decimal("1234.500"), -3, ("a", [1, 2])),
+        (2, [], {}, None, None, 127, ("é", [])),
+        (3, None, None, datetime.datetime(1970, 1, 1), Decimal("-0.001"), None, None),
+    ]
+    return spark.createDataFrame(rows, schema)
+
+
+def test_snapshot_round_trip_on_both_write_paths(spark, tmp_path, monkeypatch):
+    """Nested, decimal, timestamp and byte columns (and an empty frame)
+    read back the same rows through the pyarrow path and the Spark path,
+    and the schema read() passes from the marker equals the one parquet
+    inference gives for the written files."""
+    df = _typed_frame(spark)
+    want = sorted(df.collect())
+    got = {}
+    for bound in (ck_mod.DRIVER_MAX_ROWS, 0):
+        with monkeypatch.context() as mp:
+            mp.setattr(ck_mod, "DRIVER_MAX_ROWS", bound)
+            root = tmp_path / f"ck{bound}"
+            ck = CheckpointManager(spark, str(root))
+            for stage, frame in (("typed", df), ("empty", df.limit(0))):
+                out = ck.write(stage, frame)
+                inferred = spark.read.parquet(str(root / stage)).schema
+                assert out.schema == inferred == ck.read(stage).schema, stage
+                got[bound, stage] = sorted(ck.read(stage).collect())
+    assert got[ck_mod.DRIVER_MAX_ROWS, "typed"] == got[0, "typed"] == want
+    assert got[ck_mod.DRIVER_MAX_ROWS, "empty"] == got[0, "empty"] == []
+
+
+def test_marker_without_schema_still_reads(spark, tmp_path):
+    """A snapshot committed before markers held a schema resumes: read()
+    falls back to parquet schema inference."""
+    import json
+
+    root = tmp_path / "ck"
+    ck = CheckpointManager(spark, str(root))
+    df = _typed_frame(spark)
+    ck.write("old", df)
+    marker = root / "old" / "_COMMITTED"
+    marker.write_text(json.dumps({"stage": "old", "ts": 0.0}))
+    assert ck.exists("old")
+    assert sorted(ck.read("old").collect()) == sorted(df.collect())
+    assert ck.stage("old", lambda: 1 / 0).count() == 3

@@ -28,6 +28,24 @@ def test_laplacian_smooth_matches_dense(spark):
         assert np.allclose(out[v], X[i], atol=1e-9), (v, out[v], X[i])
 
 
+def test_laplacian_smooth_frees_its_round_snapshots(spark):
+    """Each round's snapshot is freed once the next exists, and the last
+    one is registered: after persist.release() no cached RDD is left."""
+    from jmdfane_spark import persist
+
+    persist.release()
+    live = lambda: len(spark.sparkContext._jsc.getPersistentRDDs())  # noqa: E731
+    base = live()
+    fdf = spark.createDataFrame(
+        [(v, [float(i), 1.0]) for i, v in enumerate("abcdef")], "id string, vec array<double>"
+    )
+    edf = spark.createDataFrame(list(zip("abcde", "bcdef")), "id_a string, id_b string")
+    out = laplacian_smooth(fdf, edf, rounds=3)
+    assert out.count() == 6
+    persist.release()
+    assert live() == base
+
+
 def test_outlier_reattach(spark):
     labels = spark.createDataFrame(
         [("a", "c1"), ("b", "c1"), ("x", "x"), ("y", "y")], "id string, component string"

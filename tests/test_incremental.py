@@ -90,3 +90,38 @@ def test_delta_pairs_is_one_join(spark):
     no second new×existing join."""
     nodes = Counter(_plan_nodes(delta_pairs(_members(spark, NEW), _members(spark, OLD))))
     assert nodes["Join"] == 1 and nodes["Generate"] == 0, nodes
+
+
+def _partition_labels(spark, n_ids, size):
+    """``n_ids`` labelled ids in components of ``size`` consecutive ids."""
+    ids = [f"m{i:03d}" for i in range(n_ids)]
+    rows = [(v, ids[i // size * size]) for i, v in enumerate(ids)]
+    return spark.createDataFrame(rows, "id string, component string")
+
+
+def test_merge_then_snapshot_compiles_once(spark, tmp_path):
+    """A second micro-batch of the same shape (merge, then the labels
+    snapshot) compiles no generated class: nothing that changes per batch
+    reaches the generated source."""
+    from jmdfane_spark.plans.checkpoint import CheckpointManager
+    from jmdfane_spark.plans.pipeline import _codegen_compiles
+
+    ck = CheckpointManager(spark, str(tmp_path / "ck"))
+    ck.write("labels", _partition_labels(spark, 60, 6))
+
+    def batch(k):
+        new = spark.createDataFrame([(f"n{k}a",), (f"n{k}b",)], "id string")
+        edges = spark.createDataFrame(
+            [(f"m{k:03d}", f"m{k + 6:03d}"), (f"n{k}a", f"m{k + 12:03d}")],
+            "id_a string, id_b string",
+        )
+        merged = merge_components(ck.read("labels"), new, edges).persist()
+        merged.count()
+        ck.write("labels", merged)
+        merged.unpersist()
+
+    batch(0)
+    before = _codegen_compiles(spark)
+    batch(1)
+    assert _codegen_compiles(spark) - before == 0
+    assert ck.read("labels").count() == 64

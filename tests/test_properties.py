@@ -399,3 +399,45 @@ def test_cc_driver_finishes_the_quotient(spark, tmp_path, monkeypatch):
         assert got == want and [m["phase"] for m in res.metrics] == ["driver"]
     finally:
         persist.release()
+
+
+_MERGE_OLD = ["v1", "v2", "v9", "v10", "e", "z", "é", "a"]
+_MERGE_IDS = _MERGE_OLD + ["n1", "n2", "n3", "ü"]
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    st.lists(st.integers(0, 3), max_size=len(_MERGE_OLD)),
+    st.lists(st.sampled_from(_MERGE_IDS), max_size=5),
+    st.lists(st.tuples(st.sampled_from(_MERGE_IDS), st.sampled_from(_MERGE_IDS)), max_size=6),
+)
+# an empty delta, on an empty and on a non-empty corpus
+@example([], [], [])
+@example([0, 0, 1, 2], [], [])
+# a re-ingested id (v2), an edge inside one component (v1-e), a chain
+# across three components (e-z, v2-é) that reaches a new id (é-n1), and
+# a new-only component (n2-n3)
+@example([0, 1, 2, 3, 0, 1, 2, 3], ["v2", "n1", "n2", "n3"],
+         [("v1", "e"), ("e", "z"), ("v2", "é"), ("é", "n1"), ("n2", "n3")])
+def test_merge_components_matches_union_find(spark, groups, new_ids, delta):
+    """merge_components labels every existing and new id once, as a
+    union-find over the existing partition plus the delta edges gives:
+    component = smallest member id in Spark string order."""
+    from jmdfane_spark.streaming.incremental import merge_components
+
+    old = _MERGE_OLD[: len(groups)]
+    members = {}
+    for v, g in zip(old, groups):
+        members.setdefault(g, []).append(v)
+    comp = {v: min(ms) for ms in members.values() for v in ms}
+    verts = sorted(set(old) | set(new_ids))
+    edges = [(a, b) for a, b in delta if a in verts and b in verts]
+    chains = [(ms[i], ms[i + 1]) for ms in members.values() for i in range(len(ms) - 1)]
+    want = _union_find(verts, chains + edges)
+
+    labels = spark.createDataFrame(sorted(comp.items()), "id string, component string")
+    new = spark.createDataFrame([(v,) for v in new_ids], "id string")
+    edf = spark.createDataFrame(edges, "id_a string, id_b string")
+    rows = merge_components(labels, new, edf).collect()
+    assert len(rows) == len(verts)
+    assert {r.id: r.component for r in rows} == want
