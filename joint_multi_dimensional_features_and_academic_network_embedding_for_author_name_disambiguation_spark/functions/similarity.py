@@ -41,6 +41,11 @@ def sql_of(c: Column | str) -> str:
     return c if isinstance(c, str) else c._jc.node().sql()
 
 
+def sql_name(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def jaccard_sets_sql(a: str, b: str) -> str:
     """SQL text of :func:`jaccard_sets` over the SQL expressions ``a``, ``b``."""
     inter = f"CAST(size(array_intersect({a}, {b})) AS DOUBLE)"

@@ -1,5 +1,10 @@
 """Text normalization / tokenization / analysis as JVM-side Column math.
 
+``normalize_text``, ``tokenize``, ``path_stem`` and ``hashed_word_ngrams``
+are defined once, as SQL text (``*_sql``) that their Column helpers
+parse, so a plan built from SQL strings (``normalize_files``) reads the
+same definitions.
+
 Mirrors the reference's text pipeline semantics (lowercase → strip
 punctuation → collapse whitespace → split → drop short tokens/stopwords;
 ``convert()`` duplicated across the reference at e.g.
@@ -18,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .similarity import sql_of
+
 # Compact stopword list: intersection of the reference's inline list
 # (src/utils/utils.py:337-345) with generic English function words; the
 # reference's full 926-entry file is domain(OAG)-specific.
@@ -32,45 +39,72 @@ STOPWORDS: tuple[str, ...] = (
 NON_ALNUM = "[^a-z0-9]+"
 
 
-def normalize_text(col: Column) -> Column:
-    """lowercase → non-alphanumerics to space → trim (F1)."""
-    return F.trim(F.regexp_replace(F.lower(col), NON_ALNUM, " "))
+def normalize_text_sql(text: str) -> str:
+    """SQL text of :func:`normalize_text` over the SQL expression ``text``."""
+    return f"trim(regexp_replace(lower({text}), '{NON_ALNUM}', ' '))"
 
 
-def tokenize(col: Column, min_len: int = 2, drop_stopwords: bool = True) -> Column:
-    """Normalized token array: split, drop empties/short tokens/stopwords.
+def normalize_text(col: Column | str) -> Column:
+    """lowercase → non-alphanumerics to space → trim (F1). Arguments as
+    in ``similarity.sql_of``."""
+    return F.expr(normalize_text_sql(sql_of(col)))
 
-    Reference: split + `len(word) > 1` filter (src/utils/utils.py:403,418)
-    + stopword removal (F2/F3).
-    """
-    toks = F.split(normalize_text(col), " ")
-    toks = F.filter(toks, lambda x: F.length(x) >= min_len)
+
+def tokenize_sql(text: str, min_len: int = 2, drop_stopwords: bool = True) -> str:
+    """SQL text of :func:`tokenize` over the SQL expression ``text``."""
+    toks = f"filter(split({normalize_text_sql(text)}, ' '), x -> (length(x) >= {min_len}))"
     if drop_stopwords:
-        # F.filter, NOT array_except — array_except silently dedups, which
+        # filter, NOT array_except — array_except silently dedups, which
         # would corrupt downstream shingle sequences
-        sw = F.array(*[F.lit(s) for s in STOPWORDS])
-        toks = F.filter(toks, lambda x: ~F.array_contains(sw, x))
+        sw = ", ".join(f"'{s}'" for s in STOPWORDS)
+        toks = f"filter({toks}, x -> (NOT array_contains(array({sw}), x)))"
     return toks
 
 
-def path_stem(path: Column) -> Column:
+def tokenize(col: Column | str, min_len: int = 2, drop_stopwords: bool = True) -> Column:
+    """Normalized token array: split, drop empties/short tokens/stopwords.
+
+    Reference: split + `len(word) > 1` filter (src/utils/utils.py:403,418)
+    + stopword removal (F2/F3). Arguments as in ``similarity.sql_of``.
+    """
+    return F.expr(tokenize_sql(sql_of(col), min_len, drop_stopwords))
+
+
+def path_stem_sql(path: str) -> str:
+    """SQL text of :func:`path_stem` over the SQL expression ``path``."""
+    base = f"element_at(split({path}, '/'), -1)"
+    stem = f"regexp_replace({base}, '\\\\.[A-Za-z0-9]+$', '')"  # drop extension
+    stem = f"lower(regexp_replace({stem}, '[^A-Za-z0-9]+', ''))"
+    # strip ALL trailing variant junk in one anchored pass so `foo`,
+    # `foo2`, `foo_v2`, `foo2_copy` normalize identically
+    return f"regexp_replace({stem}, '(copy|final|new|old|backup|bak|v[0-9]+|[0-9]+)+$', '')"
+
+
+def path_stem(path: Column | str) -> Column:
     """Normalized file-name stem used as part of the blocking key.
 
     Strips directories, extension, case, separators, and common clone
     suffixes (`_copy`, `_v2`, trailing digits) so renamed/moved clones
     land in the same block — the analogue of the reference's cleaned
     author_name blocking key (src/pre_data/repare_data_name.py).
+    Arguments as in ``similarity.sql_of``.
     """
-    base = F.element_at(F.split(path, "/"), -1)
-    stem = F.regexp_replace(base, r"\.[A-Za-z0-9]+$", "")  # drop extension
-    stem = F.lower(F.regexp_replace(stem, "[^A-Za-z0-9]+", ""))
-    # strip ALL trailing variant junk in one anchored pass so `foo`,
-    # `foo2`, `foo_v2`, `foo2_copy` normalize identically
-    stem = F.regexp_replace(stem, "(copy|final|new|old|backup|bak|v[0-9]+|[0-9]+)+$", "")
-    return stem
+    return F.expr(path_stem_sql(sql_of(path)))
 
 
-def hashed_word_ngrams(hashed_tokens: Column, n: int = 3) -> Column:
+def hashed_word_ngrams_sql(hashed_tokens: str, n: int = 3) -> str:
+    """SQL text of :func:`hashed_word_ngrams` over the SQL expression
+    ``hashed_tokens``."""
+    idx = f"sequence(1, greatest((size(t) - {n - 1}), 1))"
+    shingles = f"transform({idx}, i -> xxhash64(slice(t, i, {n})))"
+    build = (
+        f"array_distinct(CASE WHEN (size(t) >= {n}) THEN {shingles} "
+        "ELSE array(xxhash64(t)) END)"
+    )
+    return f"element_at(transform(array({hashed_tokens}), t -> {build}), 1)"
+
+
+def hashed_word_ngrams(hashed_tokens: Column | str, n: int = 3) -> Column:
     """Word n-gram shingle HASHES from an already-hashed token array.
 
     Equivalent set semantics to ``transform(word_ngrams(toks, n),
@@ -84,16 +118,9 @@ def hashed_word_ngrams(hashed_tokens: Column, n: int = 3) -> Column:
     k<n-element chained hash cannot equal an n-element one, so fallback
     and true shingles never alias. Same let-binding discipline as
     word_ngrams (the input is referenced once per output element).
+    Arguments as in ``similarity.sql_of``.
     """
-    def build(t: Column) -> Column:
-        m = F.size(t)
-        idx = F.sequence(F.lit(1), F.greatest(m - (n - 1), F.lit(1)))
-        return F.array_distinct(
-            F.when(m >= n, F.transform(idx, lambda i: F.xxhash64(F.slice(t, i, n))))
-            .otherwise(F.array(F.xxhash64(t)))
-        )
-
-    return F.element_at(F.transform(F.array(hashed_tokens), build), 1)
+    return F.expr(hashed_word_ngrams_sql(sql_of(hashed_tokens), n))
 
 
 def word_ngrams(tokens: Column, n: int = 3) -> Column:

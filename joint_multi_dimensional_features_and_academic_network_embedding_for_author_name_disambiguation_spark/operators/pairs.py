@@ -9,13 +9,15 @@ melts down on hot blocks (the reference's worst block is 3228 mentions ≈
 shuffle partition*). AQE skew-join splits shuffle partitions but cannot
 split the O(n²) pair explosion itself, so we do it algorithmically:
 
-  1. pre-pass `groupBy(block).count()` estimates pair counts (SURVEY §4
-     "custom work" item 2);
-  2. blocks over ``max_rows_per_task`` are divided into s deterministic
-     buckets (xxhash64(id) mod s, no RNG);
-  3. a broadcast combo table of the s·(s+1)/2 bucket pairs replicates the
-     join so every bucket pair is its own shuffle key → a hot block's
-     pairs are produced by many independent tasks.
+  1. one pre-pass action (``block_stats``) counts the rows per block and
+     returns the hot blocks, those over ``max_rows_per_task`` rows
+     (SURVEY §4 "custom work" item 2);
+  2. a hot block is divided into s deterministic buckets (xxhash64(id)
+     mod s, no RNG); every other block is bucket 0;
+  3. each a-side row of bucket i is replicated to the buckets j ≥ i
+     (``explode(sequence(i, s-1))``), so every one of the s·(s+1)/2
+     bucket pairs is its own shuffle key → a hot block's pairs are
+     produced by many independent tasks.
 
 All pairs are produced exactly once: cross-bucket combos (i<j) are unique
 by construction, intra-bucket combos are guarded by id_a<id_b, and output
@@ -24,9 +26,13 @@ order is normalized so id_a < id_b.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.similarity import sql_name
 
 # Forced-broadcast byte budget for the payload join-back. Spark's hard
 # broadcast cap is 8 GB; this leaves headroom for BOTH sides (a-payload +
@@ -114,88 +120,128 @@ def estimated_broadcast_bytes(df: DataFrame, n_rows: int, sample_rows: int = 200
     return float(n_rows) * float(row or 0.0)
 
 
+class BlockStats(NamedTuple):
+    """What the pair generation needs to know about a blocking-key table
+    before it runs: ``rows`` (the key rows, or those marked by
+    ``block_stats``' ``count_if``), ``pairs`` (Σ n·(n−1)/2 over the key
+    groups: the exact row count of the blocked self-join, before any
+    dedup) and ``hot``, the (xxhash64 of the block key, splits) of every
+    block with more than ``max_rows_per_task`` rows."""
+
+    rows: int
+    pairs: float
+    hot: list
+
+
+def block_stats(
+    keys: DataFrame,
+    block_col: str = "block_key",
+    max_rows_per_task: int = 2000,
+    count_if: str | None = None,
+) -> BlockStats:
+    """:class:`BlockStats` of ``keys`` in one action: a group-by on the
+    block key and one global aggregate over the groups, collected as one
+    row. On a persisted ``keys`` (or a projection of a persisted frame)
+    that action is also what fills the cache.
+
+    ``count_if``: SQL text of a boolean over ``keys``; ``rows`` then counts
+    only the rows it holds for (the pipeline marks its stem keys, one per
+    member, among the MinHash band keys).
+
+    The collect is bounded without a knob: a hot block has more than
+    ``max_rows_per_task`` rows, so the hot list has at most
+    rows / ``max_rows_per_task`` entries. A NULL block key pairs with
+    nothing and is never hot.
+    """
+    m, blk = int(max_rows_per_task), sql_name(block_col)
+    counts = [F.expr("count(1) AS _n")]
+    if count_if is not None:
+        counts.append(F.expr(f"count_if({count_if}) AS _r"))
+    row = (
+        keys.groupBy(block_col)
+        .agg(*counts)
+        .selectExpr(
+            f"coalesce(sum({'_r' if count_if is not None else '_n'}), 0) AS rows",
+            "coalesce(sum(((_n * (_n - 1)) / 2)), 0.0D) AS pairs",
+            f"collect_list(struct(xxhash64({blk}) AS h, "
+            f"CAST(ceil((CAST(_n AS DOUBLE) / {m})) AS INT) AS s)) "
+            f"FILTER (WHERE (_n > {m}) AND ({blk} IS NOT NULL)) AS hot",
+        )
+        .collect()[0]
+    )
+    return BlockStats(int(row["rows"]), float(row["pairs"]), [(r["h"], r["s"]) for r in row["hot"]])
+
+
 def blocked_pairs(
     members: DataFrame,
     block_col: str = "block_key",
     id_col: str = "id",
     max_rows_per_task: int = 2000,
-    counts: DataFrame | None = None,
+    hot: list | None = None,
 ) -> DataFrame:
     """All unordered within-block pairs: (block_key, id_a, id_b, + payload).
 
     ``members`` must have one row per (block_key, id); every other column
     is carried as ``<col>_a`` / ``<col>_b`` payload for the scorer.
 
-    ``counts``: optional precomputed ``(block_col, _n)`` block-size table
-    (e.g. the pipeline's pair-count pre-pass) so the same skinny groupBy
-    is not re-aggregated here.
+    ``hot``: the (key hash, splits) list of :func:`block_stats` when the
+    caller already has it (the pipeline's pre-pass); without it one
+    bounded collect computes it here. The list becomes a small broadcast
+    table, an inline ``VALUES`` of integers that no job builds, joined on
+    xxhash64 of the block key: no key text is ever written into SQL, so
+    quotes, backslashes or any other character in a key cannot break it.
+    Blocks not on it keep bucket 0. Splitting is exact for any number of
+    buckets, so a block whose key hash collides with a hot one's (odds
+    ~2^-64) is merely split too.
     """
+    if hot is None:
+        hot = block_stats(members, block_col, max_rows_per_task).hot
     payload = [c for c in members.columns if c not in (block_col, id_col)]
+    blk, key = sql_name(block_col), sql_name(id_col)
+    if hot:
+        values = ", ".join(f"({int(h)}L, {int(n)})" for h, n in hot)
+        table = members.sparkSession.sql(f"SELECT * FROM VALUES {values} AS t(_h, _s)")
+        members = members.selectExpr("*", f"xxhash64({blk}) AS _h").join(
+            table.hint("broadcast"), "_h", "left"
+        )
+        splits, bucket = "coalesce(_s, 1)", f"CAST(pmod(xxhash64({key}), coalesce(_s, 1)) AS INT)"
+    else:
+        splits, bucket = "1", "0"
+    bucketed = members.selectExpr(
+        blk, key, *map(sql_name, payload), f"{splits} AS _s", f"{bucket} AS _b"
+    )
+    # each a-row of bucket i meets the b-rows of buckets i..s-1: the s·(s+1)/2
+    # UNORDERED bucket pairs of a block, so every bucket pair is its own
+    # shuffle key and a hot block's pairs come from many tasks. Cross-bucket
+    # pairs (i<j) are unique by construction (bucket is a function of id);
+    # intra-bucket ones need the id_a<id_b guard.
+    a = bucketed.selectExpr(
+        blk, "_b AS _bi", "explode(sequence(_b, (_s - 1))) AS _bj", f"{key} AS id_a",
+        *[f"{sql_name(c)} AS {sql_name(c + '_a')}" for c in payload],
+    )
+    b = bucketed.selectExpr(
+        blk, "_b AS _bj", f"{key} AS id_b",
+        *[f"{sql_name(c)} AS {sql_name(c + '_b')}" for c in payload],
+    )
+    joined = a.join(b, [block_col, "_bj"]).where("(_bi < _bj) OR (id_a < id_b)")
+    # a cross-bucket pair can arrive reversed
+    return joined.selectExpr(*ordered_pair_columns(blk, payload))
 
-    if counts is None:
-        counts = members.groupBy(block_col).agg(F.count("*").alias("_n"))
-    counts = counts.withColumn(
-        "_splits",
-        F.ceil(F.col("_n").cast("double") / F.lit(max_rows_per_task)).cast("int"),
-    )
-    # combo table: for each block, only UNORDERED (i ≤ j) bucket pairs —
-    # s·(s+1)/2 combos, not s². Enumerating all ordered combos and then
-    # filtering `id_a < id_b` materializes ~2× the join output on the
-    # hottest operator in the engine; instead each unordered pair is
-    # produced exactly once (i<j cross-bucket, i==j intra-bucket with an
-    # id_a<id_b guard) and pair order is normalized by a conditional swap.
-    combos = counts.select(
-        block_col,
-        "_splits",
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("_splits") - 1),
-                    lambda i: F.transform(
-                        F.sequence(i, F.col("_splits") - 1),
-                        lambda j: F.struct(i.alias("bi"), j.alias("bj")),
-                    ),
-                )
-            )
-        ).alias("_c"),
-    ).select(block_col, "_splits", F.col("_c.bi").alias("_bi"), F.col("_c.bj").alias("_bj"))
 
-    bucketed = members.join(F.broadcast(counts.select(block_col, "_splits")), block_col).withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(id_col)), F.col("_splits")).cast("int")
-    )
+def ordered_pair_columns(blk: str, payload: list[str]) -> list[str]:
+    """SQL select list of a pair table in output form: the block key
+    ``blk`` (SQL text), then ``id_a < id_b`` with every payload column's
+    ``<c>_a`` / ``<c>_b`` swapped alongside when a pair arrived reversed."""
 
-    a = bucketed.select(
-        F.col(block_col),
-        F.col("_bucket").alias("_bi"),
-        F.col(id_col).alias("id_a"),
-        *[F.col(c).alias(f"{c}_a") for c in payload],
-    )
-    b = bucketed.select(
-        F.col(block_col),
-        F.col("_bucket").alias("_bj"),
-        F.col(id_col).alias("id_b"),
-        *[F.col(c).alias(f"{c}_b") for c in payload],
-    )
-    tasks = F.broadcast(combos.select(block_col, "_bi", "_bj"))
-    joined = (
-        a.join(tasks, [block_col, "_bi"])
-        .join(b, [block_col, "_bj"])
-        # intra-bucket combos need the strict-order guard; cross-bucket
-        # (bi<bj) pairs are already unique (bucket is a function of id)
-        .where((F.col("_bi") < F.col("_bj")) | (F.col("id_a") < F.col("id_b")))
-    )
-    # normalize so id_a < id_b always (a cross-bucket pair can arrive
-    # reversed), swapping the payload alongside — pure column math
-    swap = F.col("id_a") > F.col("id_b")
-    out = [
-        F.col(block_col),
-        F.when(swap, F.col("id_b")).otherwise(F.col("id_a")).alias("id_a"),
-        F.when(swap, F.col("id_a")).otherwise(F.col("id_b")).alias("id_b"),
-    ]
+    def ordered(x: str, y: str) -> str:
+        """``x`` for a pair that arrived as id_a < id_b, else ``y``."""
+        return f"CASE WHEN (id_a > id_b) THEN {y} ELSE {x} END AS {x}"
+
+    out = [blk, ordered("id_a", "id_b"), ordered("id_b", "id_a")]
     for c in payload:
-        out.append(F.when(swap, F.col(f"{c}_b")).otherwise(F.col(f"{c}_a")).alias(f"{c}_a"))
-        out.append(F.when(swap, F.col(f"{c}_a")).otherwise(F.col(f"{c}_b")).alias(f"{c}_b"))
-    return joined.select(*out)
+        ca, cb = sql_name(c + "_a"), sql_name(c + "_b")
+        out += [ordered(ca, cb), ordered(cb, ca)]
+    return out
 
 
 def pairs_from_keys(

@@ -30,7 +30,7 @@ from ..functions import text as T
 from ..operators import scoring
 from ..operators.connected_components import connected_components
 from ..operators.minhash import banded_keys
-from ..operators.pairs import blocked_pairs
+from ..operators.pairs import block_stats, blocked_pairs
 from .checkpoint import CheckpointManager
 
 
@@ -64,6 +64,14 @@ class PipelineResult:
         _persist.unpersist_any(self.labels)
 
 
+def cached_bytes(df: DataFrame) -> int:
+    """Size in bytes that ``df``'s optimized plan reports. For a persisted
+    frame whose cache every partition has filled, that is the exact size
+    of the cached batches (and the plan's row count is exact too);
+    before that it is Catalyst's estimate."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
 def normalize_files(
     files: DataFrame, staged: bool = False, persists: list | None = None
 ) -> DataFrame:
@@ -74,21 +82,23 @@ def normalize_files(
     primitive longs is ~3.6× faster than on strings (measured sf0.1);
     Jaccard on hashed sets is exact up to 2^-64-scale collisions.
     """
-    base = files.select(
-        F.concat_ws(":", "repo", "path", "commit").alias("id"),
+    # SQL text, one py4j call per select: built from Column objects the
+    # same plan took 676 py4j round trips (~0.1 s) per call
+    base = files.selectExpr(
+        "concat_ws(':', repo, path, `commit`) AS id",
         "repo",
         "path",
-        "commit",
+        "`commit`",
         "lang",
-        F.sha2(F.col("content"), 256).alias("content_sha"),
-        F.lower(F.regexp_replace(F.col("path"), "[^A-Za-z0-9/.]+", "")).alias("norm_path"),
-        T.path_stem(F.col("path")).alias("stem"),
+        "sha2(content, 256) AS content_sha",
+        "lower(regexp_replace(path, '[^A-Za-z0-9/.]+', '')) AS norm_path",
+        f"{T.path_stem_sql('path')} AS stem",
         # hash EARLY: the staged column is the hashed token sequence, so
         # the distinct/sort for `tokens` and the shingle construction all
         # run on longs (identical token-hash values: hash-then-distinct ==
         # distinct-then-hash), and the barrier cache holds 8-byte elements
         # instead of strings.
-        F.transform(T.tokenize(F.col("content")), lambda t: F.xxhash64(t)).alias("_th"),
+        f"transform({T.tokenize_sql('content')}, x -> xxhash64(x)) AS _th",
     )
     if staged:
         # materialization barrier: the shingle transform references the
@@ -103,13 +113,13 @@ def normalize_files(
             persists.append(base)
         else:
             _persist.register(base)
-    return base.select(
-        "id", "repo", "path", "commit", "lang", "content_sha", "norm_path", "stem",
-        F.array_sort(F.array_distinct(F.col("_th"))).alias("tokens"),
+    return base.selectExpr(
+        "id", "repo", "path", "`commit`", "lang", "content_sha", "norm_path", "stem",
+        "array_sort(array_distinct(_th)) AS tokens",
         # shingle hashes from hashed tokens: equal-set semantics to the r5
         # string-trigram hashing (scores depend only on shingle-set
         # relations, which are preserved), ~2× cheaper per row
-        F.array_sort(T.hashed_word_ngrams(F.col("_th"), 3)).alias("shingles"),
+        f"array_sort({T.hashed_word_ngrams_sql('_th', 3)}) AS shingles",
     )
 
 
@@ -134,9 +144,11 @@ def run_pipeline(
     repair_outliers: bool = False,
     repair_min_score: float | None = None,
 ) -> PipelineResult:
-    """clusterer: "cc" (distributed hash-min connected components),
-    "ghac" (per-block average-linkage + modularity k-scan), or "spectral"
-    (per-block normalized spectral clustering — the reference's headline
+    """clusterer: "cc" (connected components: finished on the driver when
+    the edge set has at most ``connected_components.DRIVER_MAX_EDGES``
+    rows, hash-min rounds above that bound), "ghac" (per-block
+    average-linkage + modularity k-scan), or "spectral" (per-block
+    normalized spectral clustering — the reference's headline
     true-cluster-count configuration, local_embedding.py:242-271,517-519).
 
     true_k: optional (block_key, k) table of per-block true cluster counts
@@ -176,8 +188,8 @@ def run_pipeline(
     par = spark.sparkContext.defaultParallelism
     # corpus row count, read from the cheap PRE-normalize scan (for a
     # parquet source this is a metadata-scale count job): feeds the TF-IDF
-    # N and the broadcast gate, replacing the r5 docs.count() that
-    # executed the tokenization projection one extra time (VERDICT item 4)
+    # N, replacing the r5 docs.count() that executed the tokenization
+    # projection one extra time (VERDICT item 4)
     _label("stage0 normalize")
     n_files = files.count()
     if files.rdd.getNumPartitions() < par:
@@ -195,12 +207,35 @@ def run_pipeline(
         # (twice), and every surviving pair row
         feats = feats.drop("tfidf_idx", "tfidf_val")
         norm = norm.join(feats, "id", "left")
-    members = (
-        norm.withColumn("block_key", F.concat_ws("|", "lang", "stem"))
-        .drop("repo", "path", "commit")
-        .persist()
+    members = norm.selectExpr(
+        "* EXCEPT (repo, path, `commit`)", "concat_ws('|', lang, stem) AS block_key"
+    ).persist()
+    stem_k = members.selectExpr("id", "block_key")
+    if use_bands:
+        # composite blocking: stem key + MinHash band keys in one
+        # skinny key table (band keys prefixed by lang so banding
+        # never crosses a language boundary); the stem keys, one per
+        # member, are marked so the pre-pass can count the members
+        band_k = banded_keys(
+            members, "id", "tokens", bands=bands, rows=rows_per_band, prefix_col="lang"
+        )
+        prepass = (
+            stem_k.selectExpr("*", "true AS _stem")
+            .unionByName(band_k.selectExpr("*", "false AS _stem"))
+            .persist()
+        )
+        keys = prepass.selectExpr("id", "block_key")
+    else:
+        prepass = keys = stem_k
+    # Blocking pre-pass, ONE action: the member count (CC's vertex count),
+    # Σ over key groups of n·(n−1)/2 (the exact row count the blocked
+    # self-join materializes, pre-dedup for banded keys — precisely the
+    # volume the shuffle carries) and the hot blocks blocked_pairs splits.
+    # Its scan is what fills the members cache (and the banded key cache).
+    stats = block_stats(
+        prepass, "block_key", max_rows_per_task, count_if="_stem" if use_bands else None
     )
-    n_members = members.count()
+    n_members, est_pairs = stats.rows, stats.pairs
     # members is materialized (MEMORY_AND_DISK) — the tokenization barrier
     # behind it is no longer needed by any live plan
     for _df in _staged:
@@ -211,35 +246,12 @@ def run_pipeline(
     # ---- stage 1: blocking → SKINNY candidate pairs --------------------------
     # Pair generation shuffles only (block_key, id): the wide feature
     # payload never rides through the O(n²)-bounded self-join.
-    stem_k = members.select("id", "block_key")
-    if use_bands:
-        # composite blocking: stem key + MinHash band keys in one
-        # skinny key table (band keys prefixed by lang so banding
-        # never crosses a language boundary)
-        band_k = banded_keys(
-            members, "id", "tokens", bands=bands, rows=rows_per_band, prefix_col="lang"
-        )
-        keys = stem_k.unionByName(band_k).persist()
-    else:
-        keys = stem_k.persist()
-    # Pair-count pre-pass: Σ over key groups of n·(n−1)/2 is the exact
-    # row count the blocked self-join will materialize (pre-dedup for
-    # banded keys — which is precisely the volume the shuffle must carry).
-    # One skinny groupBy — at any scale it shuffles only #distinct keys —
-    # computed ONCE and shared with blocked_pairs' bucket-split pre-pass
-    # (r5 aggregated the identical table twice).
-    counts = keys.groupBy("block_key").agg(F.count("*").alias("_n")).persist()
     _label("stage1 blocking")
-    est_pairs = (
-        counts.agg(F.sum(F.col("_n") * (F.col("_n") - 1) / 2).alias("_p"))
-        .collect()[0]["_p"]
-        or 0.0
-    )
 
     def build_pairs() -> DataFrame:
-        pairs = blocked_pairs(keys, "block_key", "id", max_rows_per_task, counts=counts)
+        pairs = blocked_pairs(keys, "block_key", "id", max_rows_per_task, hot=stats.hot)
         if use_bands:
-            pairs = pairs.groupBy("id_a", "id_b").agg(F.min("block_key").alias("block_key"))
+            pairs = pairs.groupBy("id_a", "id_b").agg(F.expr("min(block_key) AS block_key"))
         return pairs
 
     pairs = ck.stage("pairs", build_pairs) if ck else build_pairs()
@@ -265,8 +277,8 @@ def run_pipeline(
     # construction, and skips the sort.
     pairs = pairs.repartition(n_part, "id_a", "id_b").persist()
     n_pairs = pairs.count()
-    keys.unpersist()
-    counts.unpersist()
+    if use_bands:
+        prepass.unpersist()
     metrics["pairs_generated"] = n_pairs
     metrics["pairs_estimated"] = int(est_pairs)
     metrics["pair_partitions"] = n_part
@@ -282,22 +294,22 @@ def run_pipeline(
     # payload columns blows past the autoBroadcast threshold even for a
     # 23k-row table, silently picking SortMergeJoin — which sorts the
     # ENTIRE pair stream twice (measured: the dominant, worst-scaling cost
-    # of the scoring stage on the 14.5M-pair workload). The gate is
-    # ESTIMATED BYTES (count × sampled mean row size, ×2 for the two
-    # broadcast copies) against a 2 GB budget — above it (payload no
-    # longer fits executor memory, the true 100 TB regime) it stays a
-    # shuffled join over data-sized partitions.
+    # of the scoring stage on the 14.5M-pair workload). The gate reads the
+    # members cache's own statistics: once the pre-pass has materialized
+    # it, its size is the exact in-memory size of the cached batches (no
+    # sampling job), ×2 for the two broadcast copies, against a 2 GB
+    # budget — above it (payload no longer fits executor memory, the true
+    # 100 TB regime) it stays a shuffled join over data-sized partitions.
     _scoring_hold: list = []  # emb-path wide persist, released after scored materializes
 
     def build_scored() -> DataFrame:
-        from ..operators.pairs import BROADCAST_BYTE_CAP, estimated_broadcast_bytes
+        from ..operators.pairs import BROADCAST_BYTE_CAP
 
-        payload = members.drop("block_key")
-        pcols = [c for c in payload.columns if c != "id"]
-        pa = payload.select(F.col("id").alias("id_a"), *[F.col(c).alias(f"{c}_a") for c in pcols])
-        pb = payload.select(F.col("id").alias("id_b"), *[F.col(c).alias(f"{c}_b") for c in pcols])
-        if estimated_broadcast_bytes(payload, n_members) * 2 <= BROADCAST_BYTE_CAP:
-            pa, pb = F.broadcast(pa), F.broadcast(pb)
+        pcols = [c for c in members.columns if c not in ("id", "block_key")]
+        pa = members.selectExpr("id AS id_a", *[f"{c} AS {c}_a" for c in pcols])
+        pb = members.selectExpr("id AS id_b", *[f"{c} AS {c}_b" for c in pcols])
+        if cached_bytes(members) * 2 <= BROADCAST_BYTE_CAP:
+            pa, pb = pa.hint("broadcast"), pb.hint("broadcast")
         wide = pairs.join(pa, "id_a").join(pb, "id_b")
         weights = channel_weights
         if use_embedding:

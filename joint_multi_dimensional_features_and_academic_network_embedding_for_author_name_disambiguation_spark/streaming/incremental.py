@@ -26,12 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.similarity import sql_name as _q
 from ..operators.connected_components import connected_components
-
-
-def _q(name: str) -> str:
-    """``name`` as a quoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
+from ..operators.pairs import ordered_pair_columns
 
 
 def delta_pairs(
@@ -74,16 +71,7 @@ def delta_pairs(
         blk, f"{key} AS id_b", "_new", *[f"{_q(c)} AS {_q(c + '_b')}" for c in payload]
     )
     joined = a.join(b, block_col).where("id_a < id_b OR (NOT _new AND id_a > id_b)")
-
-    def ordered(x: str, y: str) -> str:
-        """``x`` for a pair that arrived as id_a < id_b, else ``y``."""
-        return f"CASE WHEN id_a > id_b THEN {y} ELSE {x} END AS {x}"
-
-    out = [blk, ordered("id_a", "id_b"), ordered("id_b", "id_a")]
-    for c in payload:
-        ca, cb = _q(c + "_a"), _q(c + "_b")
-        out += [ordered(ca, cb), ordered(cb, ca)]
-    return joined.selectExpr(*out)
+    return joined.selectExpr(*ordered_pair_columns(blk, payload))
 
 
 def merge_components(

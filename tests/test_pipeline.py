@@ -5,7 +5,10 @@
   * resumability from stage checkpoints
 """
 
+import itertools
+
 import pyspark.sql.functions as F
+import pytest
 
 from jmdfane_spark.operators.evaluate import pairwise_f1, pairwise_f1_on_labeled_pairs
 from jmdfane_spark.plans.pipeline import normalize_files, run_pipeline
@@ -268,22 +271,114 @@ def test_tfidf_arrow_kernel_matches_jvm(spark, fixture_dfs):
         assert abs(r.jvm - r.arrow) < 1e-6, (r.jvm, r.arrow)
 
 
-def test_warm_rerun_compiles_no_classes(spark):
-    """A second run of the same pipeline reuses every generated class.
-    This hot-block fixture compiles 121 distinct classes in a fresh JVM,
-    more than Spark's default codegen cache of 100 entries: at that
-    default the cache cycles and the rerun recompiles about 85 of them."""
-    from jmdfane_spark import persist
+_OPS = itertools.count()  # one Spark job group per op
+_HOT_KW = dict(threshold=0.4, use_bands=False, use_tfidf=True, max_rows_per_task=100)
+
+
+@pytest.fixture(scope="module")
+def hot_files(spark):
+    """perfbench er_hotblock's shape: one 120-row block over
+    max_rows_per_task beside 11 blocks of 20."""
     from jmdfane_spark.sources import synthetic
 
     files, _, _ = synthetic.to_spark(spark, synthetic.synthesize(
         n_blocks=12, min_rows=20, max_rows=20, hot_block_rows=120,
         clusters_per_block=(2, 20),
     ))
-    kw = dict(threshold=0.4, use_bands=False, use_tfidf=True, max_rows_per_task=100)
-    for _ in range(2):
+    return files
+
+
+def _run_once(spark, files, **kw):
+    """run_pipeline + labels.count(), as one perfbench batch op; returns the
+    metrics, the partition and the op's Spark job count."""
+    from jmdfane_spark import persist
+
+    sc, group = spark.sparkContext, f"test-op-{next(_OPS)}"
+    sc.setJobGroup(group, "one batch op")
+    try:
         res = run_pipeline(spark, files, **kw)
         res.labels.count()
-        res.release()
-        persist.release()
-    assert res.metrics["codegen_compiles"] == 0, res.metrics["codegen_compiles"]
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    comps: dict = {}
+    for r in res.labels.select("id", "component").collect():
+        comps.setdefault(r.component, []).append(r.id)
+    res.release()
+    persist.release()
+    return res.metrics, sorted(sorted(c) for c in comps.values()), jobs
+
+
+def test_warm_rerun_compiles_no_classes(spark, hot_files):
+    """A second run of the same pipeline reuses every generated class.
+    This hot-block fixture compiles 121 distinct classes in a fresh JVM,
+    more than Spark's default codegen cache of 100 entries: at that
+    default the cache cycles and the rerun recompiles about 85 of them."""
+    for _ in range(2):
+        metrics, _, _ = _run_once(spark, hot_files, **_HOT_KW)
+    assert metrics["codegen_compiles"] == 0, metrics["codegen_compiles"]
+
+
+def test_warm_rerun_job_budget(spark, hot_files):
+    """A warm batch op (run_pipeline + labels.count()) on the hot-block
+    fixture runs at most JOB_BUDGET Spark jobs: the blocking pre-pass is
+    one action that also fills the members cache, and the payload
+    broadcast gate reads the cache's statistics instead of sampling. A
+    separate members count, block-count table, pair-estimate collect and
+    sampled gate took the op to 40."""
+    JOB_BUDGET = 32
+    _run_once(spark, hot_files, **_HOT_KW)
+    _, _, jobs = _run_once(spark, hot_files, **_HOT_KW)
+    assert jobs <= JOB_BUDGET, jobs
+
+
+def test_payload_broadcast_gate_reads_cache_stats(spark, hot_files, monkeypatch):
+    """Once the blocking pre-pass has run, the members cache is loaded:
+    its plan statistics report rowCount == the member count. The gate
+    forces the payload broadcast on the fixture and does not when
+    BROADCAST_BYTE_CAP is below the cached size (with Spark's own
+    broadcast threshold off, so the join is shuffled); pairs, edges and
+    labels are identical both ways."""
+    from jmdfane_spark.operators import pairs as pairs_mod
+    from jmdfane_spark.operators import scoring
+    from jmdfane_spark.plans import pipeline
+
+    seen: dict = {}
+    real_stats, real_bytes, real_score = pipeline.block_stats, pipeline.cached_bytes, scoring.score_pairs
+
+    def spy_stats(*a, **k):
+        seen["stats"] = real_stats(*a, **k)
+        return seen["stats"]
+
+    def spy_bytes(df):
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        seen["rows"] = int(stats.rowCount().get())
+        seen["bytes"] = real_bytes(df)
+        return seen["bytes"]
+
+    def spy_score(wide, *a, **k):
+        seen["plan"] = wide._jdf.queryExecution().optimizedPlan().toString()
+        seen["pairs"] = sorted(map(tuple, wide.select("id_a", "id_b").collect()))
+        out = real_score(wide, *a, **k)
+        seen["edges"] = sorted(map(tuple, out.select("id_a", "id_b", "score").collect()))
+        return out
+
+    monkeypatch.setattr(pipeline, "block_stats", spy_stats)
+    monkeypatch.setattr(pipeline, "cached_bytes", spy_bytes)
+    monkeypatch.setattr(scoring, "score_pairs", spy_score)
+
+    runs, threshold = {}, "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(threshold)
+    for name in ("broadcast", "shuffled"):
+        if name == "shuffled":
+            monkeypatch.setattr(pairs_mod, "BROADCAST_BYTE_CAP", seen["bytes"] * 2 - 1)
+            spark.conf.set(threshold, "-1")
+        try:
+            metrics, part, _ = _run_once(spark, hot_files, **_HOT_KW)
+        finally:
+            spark.conf.set(threshold, before)
+        assert seen["rows"] == seen["stats"].rows == 340, (seen["rows"], seen["stats"])
+        runs[name] = (seen["pairs"], seen["edges"], metrics["edges"], part)
+        seen[name] = seen["plan"].count("rightHint=(strategy=broadcast)")
+    assert seen["broadcast"] == 2 and seen["shuffled"] == 0, seen
+    assert runs["broadcast"] == runs["shuffled"]

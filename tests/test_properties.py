@@ -226,6 +226,60 @@ def test_delta_pairs_matches_brute_force(spark, rows, both_id, both_blk, new_onl
     assert got == want
 
 
+# max_rows_per_task of the split-path test; keys a literal-built hot table
+# would have to escape, and NULL (a key that pairs with nothing)
+_SPLIT_M = 4
+_SPLIT_KEYS = ["k", "it's", "back\\slash", "a|b", "ünï", "名前", "\\'|", None]
+_SPLIT_BLOCKS = st.lists(
+    st.tuples(
+        st.sampled_from(_SPLIT_KEYS),
+        st.one_of(st.integers(0, 3 * _SPLIT_M + 1), st.sampled_from([_SPLIT_M, _SPLIT_M + 1])),
+    ),
+    max_size=5,
+    unique_by=lambda b: b[0],
+)
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(_SPLIT_BLOCKS)
+@example([])
+@example([("it's", 3 * _SPLIT_M + 1)])
+@example([("a|b", _SPLIT_M), ("back\\slash", _SPLIT_M + 1), (None, _SPLIT_M + 1), ("名前", 1)])
+def test_blocked_pairs_split_matches_naive(spark, blocks):
+    """blocked_pairs gives exactly the naive within-block pair set, each
+    pair once as (id_a < id_b) with each payload on its id's side;
+    block_stats counts the rows and pairs and lists each non-NULL block
+    over max_rows_per_task rows (by key hash) with
+    ceil(n / max_rows_per_task) splits. Ids are numbered across blocks in
+    an order unrelated to their hash buckets, so cross-bucket pairs
+    arrive in both orders."""
+    import math
+
+    from jmdfane_spark.operators.pairs import block_stats, blocked_pairs
+
+    data = [(k, f"i{(7 * j + 3 * n) % 97:02d}-{j}-{n}", n)
+            for j, (k, size) in enumerate(blocks) for n in range(size)]
+    df = spark.createDataFrame([(k, i, f"p:{i}", n) for k, i, n in data],
+                               "block_key string, id string, p string, n bigint").persist()
+    want = Counter()
+    for x, y in itertools.combinations(data, 2):
+        if x[0] is not None and x[0] == y[0]:
+            lo, hi = sorted((x, y), key=lambda d: d[1])
+            want[(lo[0], lo[1], hi[1], f"p:{lo[1]}", f"p:{hi[1]}", lo[2], hi[2])] += 1
+
+    stats = block_stats(df, "block_key", _SPLIT_M)
+    sizes = Counter(k for k, _, _ in data)
+    assert stats.rows == len(data)
+    assert stats.pairs == sum(n * (n - 1) / 2 for n in sizes.values())
+    assert sorted(n for _, n in stats.hot) == sorted(
+        math.ceil(n / _SPLIT_M) for k, n in sizes.items() if k is not None and n > _SPLIT_M
+    )
+    out = blocked_pairs(df, "block_key", "id", _SPLIT_M)  # computes the same hot list
+    assert out.columns == ["block_key", "id_a", "id_b", "p_a", "p_b", "n_a", "n_b"]
+    assert Counter(tuple(r) for r in out.collect()) == want
+    df.unpersist()
+
+
 def _union_find(verts, edges):
     """Component = smallest member id (the root of a union-by-min forest)."""
     parent = {v: v for v in verts}
