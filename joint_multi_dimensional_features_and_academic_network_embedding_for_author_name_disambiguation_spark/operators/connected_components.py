@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import persist as _persist
+from ..functions.similarity import sql_name
 from ..session import arrow_at_most
 
 # When |V| ≤ this bound, every edge×label join hash-broadcasts the label
@@ -143,11 +144,17 @@ def _solve_on_driver(edges: pa.Table) -> pa.Table:
     return pa.table({"id": ids.take(moved), "component": ids.take(roots[moved])})
 
 
+# The label plans below are SQL text: built from Column objects, the
+# driver finish's identity select and composition took ~180 py4j round
+# trips per call.
 def _identity(sym: DataFrame) -> DataFrame:
     # sym holds both directions: src covers every vertex of the graph
-    return sym.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("component")
-    )
+    return sym.selectExpr("src AS id").distinct().selectExpr("id", "id AS component")
+
+
+def _identity_of(vertices: DataFrame, id_col: str) -> DataFrame:
+    q = sql_name(id_col)
+    return vertices.selectExpr(f"{q} AS id", f"{q} AS component")
 
 
 def _compose(base: DataFrame, final_map: DataFrame, broadcast: bool) -> DataFrame:
@@ -155,11 +162,11 @@ def _compose(base: DataFrame, final_map: DataFrame, broadcast: bool) -> DataFram
     from final_map keeps its label: a cluster settled before contracting,
     a singleton, or an id the driver map leaves out (its component is
     itself)."""
-    fmap = final_map.select(F.col("id").alias("_c1"), F.col("component").alias("_cf"))
+    fmap = final_map.selectExpr("id AS _c1", "component AS _cf")
     return (
-        base.withColumnRenamed("component", "_c1")
-        .join(F.broadcast(fmap) if broadcast else fmap, "_c1", "left")
-        .select("id", F.coalesce(F.col("_cf"), F.col("_c1")).alias("component"))
+        base.selectExpr("id", "component AS _c1")
+        .join(fmap.hint("broadcast") if broadcast else fmap, "_c1", "left")
+        .selectExpr("id", "coalesce(_cf, _c1) AS component")
     )
 
 
@@ -275,11 +282,10 @@ def connected_components(
     # resumed phase already ran rounds because its edges did not fit.
     if labels is None:
         final = _finish_on_driver(
-            edges.select("id_a", "id_b") if qedges is None else qedges.select("src", "dst")
+            edges.selectExpr("id_a", "id_b") if qedges is None else qedges.selectExpr("src", "dst")
         )
         if final is not None and base_labels is None:
-            ident = vertices.select(F.col(id_col).alias("id"), F.col(id_col).alias("component"))
-            return _result(_compose(ident, final, True))
+            return _result(_compose(_identity_of(vertices, id_col), final, True))
         if final is not None:  # resumed, so base_labels is parquet
             return _result(_compose(base_labels, final, True))
 
@@ -298,9 +304,7 @@ def connected_components(
         labels = _identity(sym)
     elif labels is None:
         # lazy: the broadcast gate's count (or round 1) materializes it
-        labels = snap = vertices.select(
-            F.col(id_col).alias("id"), F.col(id_col).alias("component")
-        ).localCheckpoint(eager=False)
+        labels = snap = _identity_of(vertices, id_col).localCheckpoint(eager=False)
 
     if n_vertices is None:
         n_vertices = labels.count()
@@ -389,7 +393,7 @@ def connected_components(
             _persist.unpersist_any(sym)
             _persist.unpersist_any(snap)
             snap = None
-            final = _finish_on_driver(qedges.select("src", "dst"))
+            final = _finish_on_driver(qedges.selectExpr("src", "dst"))
             if final is not None:
                 return _result(_compose(base_labels, final, True), base_labels, qedges)
             sym = _symmetrize(qedges, "src", "dst").persist()

@@ -75,9 +75,9 @@ def tfidf_features(
 
     IDF = ln(N / df + 1) — the reference's formula
     (src/pre_embedding/get_pre_embedding.py:50-51). All JVM-side: explode →
-    df counts → broadcast idf join → per-doc weights grouped back.
-    ``tokens_col`` may be strings or hashed longs; the sparse index is
-    pmod(xxhash64(token), dim).
+    df as a window count over each token's rows (one shuffle by token) →
+    per-doc weights regrouped by one shuffle by id. ``tokens_col`` may be
+    strings or hashed longs; the sparse index is pmod(xxhash64(token), dim).
 
     ``n_docs``: pass the row count when the caller already knows it (the
     pipeline counts the raw files scan) — skips a count job that would
@@ -97,16 +97,26 @@ def tfidf_features(
         tf = toks.selectExpr("*", "1 AS tf")
     else:
         tf = toks.groupBy(id_col, "tok").agg(F.expr("count(1) AS tf"))
-    df_counts = tf.groupBy("tok").agg(F.expr("count(1) AS df"))
-    idf = df_counts.selectExpr("tok", f"ln((({_d(n_docs)} / df) + 1.0D)) AS idf")
-    w = tf.join(idf.hint("broadcast"), "tok").selectExpr(
-        "*", f"CAST(pmod(xxhash64(tok), {dim}) AS BIGINT) AS idx", "CAST((tf * idf) AS FLOAT) AS val"
+    # df counts each token's (id, tok) rows in place, so no idf table is
+    # built and broadcast back (it is vocabulary-sized at corpus scale).
+    # The hash partitioning on id then serves both the (id, idx) sum of
+    # colliding buckets and the per-id collect: one regroup shuffle.
+    w = (
+        tf.selectExpr(key, "tok", "tf", "count(1) OVER (PARTITION BY tok) AS df")
+        .selectExpr(
+            key,
+            f"CAST(pmod(xxhash64(tok), {dim}) AS BIGINT) AS idx",
+            f"CAST((tf * ln((({_d(n_docs)} / df) + 1.0D))) AS FLOAT) AS val",
+        )
+        .repartition(id_col)
     )
-    # hash collisions into the same idx bucket are summed (groupBy idx)
     per_idx = w.groupBy(id_col, "idx").agg(F.expr("CAST(sum(val) AS FLOAT) AS val"))
     return (
         per_idx.groupBy(id_col)
-        .agg(F.expr("array_sort(collect_list(struct(idx, val))) AS _iv"))
+        # sort_array is generated code; array_sort's default comparator is
+        # an interpreted lambda. The idx keys are unique per doc, so the
+        # order is the same.
+        .agg(F.expr("sort_array(collect_list(struct(idx, val))) AS _iv"))
         .selectExpr(
             key,
             "_iv.idx AS tfidf_idx",

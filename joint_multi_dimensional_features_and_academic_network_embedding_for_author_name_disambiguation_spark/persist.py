@@ -2,18 +2,23 @@
 
 One rule covers every persisted frame: a function frees each intermediate
 it persists before it returns, except the frame it returns, and that frame
-has one owner. ``run_pipeline`` hands its labels snapshot to the
-``PipelineResult`` (``release()`` frees it). Operators that return a bare
-DataFrame (the skinny blocking-key table, the dedup barriers, CC's labels
-after hash-min rounds, the random walks) cannot know when their caller is done with it, so
-they register it here, and callers run :func:`release` once the results
-built on it are materialized. For plain ``persist()`` frames an early
-release is merely slow (the plan recomputes); for ``localCheckpoint()``
-frames it is final: lineage is truncated, so a plan still reading one
-fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Benchmark rep boundaries,
-test teardown and driver query boundaries are the safe points. This is
-executor-memory hygiene for long sessions (the correctness driver runs 41
-queries in a single JVM).
+has one owner. ``run_pipeline``'s intermediates (members, pairs, scores)
+are localCheckpoint leaves that it frees itself, and it hands its labels
+snapshot to the ``PipelineResult`` (``release()`` frees it). Operators
+that return a bare DataFrame (the skinny blocking-key table, the dedup
+barriers, CC's labels after hash-min rounds, the random walks) cannot
+know when their caller is done with it, so they register it here, and
+callers run :func:`release` once the results built on it are
+materialized. For plain ``persist()`` frames an early release is merely
+slow (the plan recomputes); for ``localCheckpoint()`` frames it is
+final: lineage is truncated, so a plan still reading one fails with
+CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. So does a read after the executor
+holding a localCheckpoint block is lost: nothing recomputes it. A run
+that must survive executor loss writes parquet snapshots
+(``run_pipeline(checkpoint_dir=...)``) and resumes from them. Benchmark
+rep boundaries, test teardown and driver query boundaries are the safe
+points. This is executor-memory hygiene for long sessions (the
+correctness driver runs 41 queries in a single JVM).
 """
 
 from __future__ import annotations

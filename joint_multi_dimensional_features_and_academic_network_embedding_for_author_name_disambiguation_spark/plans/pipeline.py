@@ -43,9 +43,13 @@ def _codegen_compiles(spark: SparkSession) -> int:
 @dataclass
 class PipelineResult:
     """``labels`` is materialized: ``run_pipeline`` takes one eager
-    localCheckpoint of it and then frees every intermediate of the run.
-    The result is the snapshot's only owner; ``persist.release()`` leaves
-    it alone.
+    localCheckpoint of it and then frees every intermediate of the run
+    (the members, pairs and scoring leaves). The result is the snapshot's
+    only owner; ``persist.release()`` leaves it alone. Like those leaves,
+    the snapshot lives in executor block stores: an executor lost before
+    the labels are read fails the read (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
+    instead of recomputing them; pass ``checkpoint_dir`` for a run that
+    must survive that.
 
     ``metrics["codegen_compiles"]`` is the number of generated classes
     compiled during the ``run_pipeline`` call; a warm rerun of the same
@@ -64,12 +68,23 @@ class PipelineResult:
         _persist.unpersist_any(self.labels)
 
 
-def cached_bytes(df: DataFrame) -> int:
-    """Size in bytes that ``df``'s optimized plan reports. For a persisted
-    frame whose cache every partition has filled, that is the exact size
-    of the cached batches (and the plan's row count is exact too);
-    before that it is Catalyst's estimate."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+def leaf_rows(df: DataFrame) -> int:
+    """Row count of a materialized leaf (an eager localCheckpoint or a
+    parquet snapshot) by one RDD job over its rows: not a SQL execution,
+    so no aggregate stage and no plan text rendered."""
+    return int(df._jdf.queryExecution().toRdd().count())
+
+
+def stored_bytes(df: DataFrame) -> int:
+    """Bytes (memory + disk) that the block manager holds for the RDD of
+    an eager localCheckpoint leaf; 0 when none is stored. A leaf's plan
+    statistics are those of the plan it was cut from: an estimate,
+    unless that plan is a filled cache."""
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+    for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():
+        if info.id() == rdd_id:
+            return int(info.memSize() + info.diskSize())
+    return 0
 
 
 def normalize_files(
@@ -115,11 +130,15 @@ def normalize_files(
             _persist.register(base)
     return base.selectExpr(
         "id", "repo", "path", "`commit`", "lang", "content_sha", "norm_path", "stem",
-        "array_sort(array_distinct(_th)) AS tokens",
+        # sort_array, not array_sort: both arrays hold non-NULL longs
+        # (xxhash64 is never NULL), where the two agree, and sort_array is
+        # generated code while array_sort's default comparator is an
+        # interpreted lambda
+        "sort_array(array_distinct(_th)) AS tokens",
         # shingle hashes from hashed tokens: equal-set semantics to the r5
         # string-trigram hashing (scores depend only on shingle-set
         # relations, which are preserved), ~2× cheaper per row
-        f"array_sort({T.hashed_word_ngrams_sql('_th', 3)}) AS shingles",
+        f"sort_array({T.hashed_word_ngrams_sql('_th', 3)}) AS shingles",
     )
 
 
@@ -164,6 +183,19 @@ def run_pipeline(
     scoring non-singleton partner, then leftover singletons with mutual
     score ≥ repair_min_score (default: ``threshold``) merge with each
     other.
+
+    Intermediates: the members table, the candidate pairs and the scoring
+    table are each materialized once as an eager localCheckpoint, a
+    LogicalRDD leaf, so every later plan reads their rows instead of
+    carrying (and re-planning, and re-rendering for the SQL listener) the
+    plans below them; their row counts are RDD jobs over the stored rows
+    (``leaf_rows``), not SQL executions. The payload broadcast gate reads
+    the members leaf's stored size (``stored_bytes``). The leaves live in
+    executor block stores and have no lineage: on a cluster, an executor
+    lost mid-run fails the run with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+    instead of recomputing. A run that must survive that passes
+    ``checkpoint_dir``: the pair and scoring stages are then committed
+    parquet snapshots, and a rerun resumes from them.
     """
     import time as _time
 
@@ -198,7 +230,7 @@ def run_pipeline(
     norm = normalize_files(files, staged=True, persists=_staged)
     if use_tfidf:
         feats = scoring.tfidf_features(
-            norm.select("id", "tokens"), "id", "tokens",
+            norm.selectExpr("id", "tokens"), "id", "tokens",
             n_docs=n_files, distinct_tokens=True,
         )
         # tfidf_features emits BOTH sparse representations; ship only the
@@ -207,9 +239,21 @@ def run_pipeline(
         # (twice), and every surviving pair row
         feats = feats.drop("tfidf_idx", "tfidf_val")
         norm = norm.join(feats, "id", "left")
-    members = norm.selectExpr(
+    # Every intermediate from here on is an eager localCheckpoint: a
+    # LogicalRDD leaf, so a later plan reads its rows without carrying,
+    # re-planning and re-rendering the plans below it. A leaf keeps the
+    # plan statistics of the plan it was cut from: cut from the join above
+    # (estimated as the product of its sides, ~4e18 B), no join on members
+    # was planned as a broadcast, and AQE chose build sides by which
+    # shuffle finished first, so plans and generated classes varied
+    # between warm runs. Cut from a filled cache, it carries exact ones.
+    cached = norm.selectExpr(
         "* EXCEPT (repo, path, `commit`)", "concat_ws('|', lang, stem) AS block_key"
     ).persist()
+    members = cached.localCheckpoint(eager=True)
+    # the caches behind members are read by no live plan
+    for _df in (cached, *_staged):
+        _df.unpersist()
     stem_k = members.selectExpr("id", "block_key")
     if use_bands:
         # composite blocking: stem key + MinHash band keys in one
@@ -231,15 +275,11 @@ def run_pipeline(
     # Σ over key groups of n·(n−1)/2 (the exact row count the blocked
     # self-join materializes, pre-dedup for banded keys — precisely the
     # volume the shuffle carries) and the hot blocks blocked_pairs splits.
-    # Its scan is what fills the members cache (and the banded key cache).
+    # Its scan fills the banded key cache.
     stats = block_stats(
         prepass, "block_key", max_rows_per_task, count_if="_stem" if use_bands else None
     )
     n_members, est_pairs = stats.rows, stats.pairs
-    # members is materialized (MEMORY_AND_DISK) — the tokenization barrier
-    # behind it is no longer needed by any live plan
-    for _df in _staged:
-        _df.unpersist()
     metrics["t_normalize"] = round(_time.time() - _t0, 2)
     _t0 = _time.time()
 
@@ -275,8 +315,8 @@ def run_pipeline(
     # retry determinism — guide §2.5); hashing the high-cardinality
     # (id_a, id_b) key spreads just as evenly, is retry-deterministic by
     # construction, and skips the sort.
-    pairs = pairs.repartition(n_part, "id_a", "id_b").persist()
-    n_pairs = pairs.count()
+    pairs = pairs.repartition(n_part, "id_a", "id_b").localCheckpoint(eager=True)
+    n_pairs = leaf_rows(pairs)
     if use_bands:
         prepass.unpersist()
     metrics["pairs_generated"] = n_pairs
@@ -295,8 +335,7 @@ def run_pipeline(
     # 23k-row table, silently picking SortMergeJoin — which sorts the
     # ENTIRE pair stream twice (measured: the dominant, worst-scaling cost
     # of the scoring stage on the 14.5M-pair workload). The gate reads the
-    # members cache's own statistics: once the pre-pass has materialized
-    # it, its size is the exact in-memory size of the cached batches (no
+    # bytes the block manager stores for the members leaf (exact, no
     # sampling job), ×2 for the two broadcast copies, against a 2 GB
     # budget — above it (payload no longer fits executor memory, the true
     # 100 TB regime) it stays a shuffled join over data-sized partitions.
@@ -308,7 +347,7 @@ def run_pipeline(
         pcols = [c for c in members.columns if c not in ("id", "block_key")]
         pa = members.selectExpr("id AS id_a", *[f"{c} AS {c}_a" for c in pcols])
         pb = members.selectExpr("id AS id_b", *[f"{c} AS {c}_b" for c in pcols])
-        if cached_bytes(members) * 2 <= BROADCAST_BYTE_CAP:
+        if stored_bytes(members) * 2 <= BROADCAST_BYTE_CAP:
             pa, pb = pa.hint("broadcast"), pb.hint("broadcast")
         wide = pairs.join(pa, "id_a").join(pb, "id_b")
         weights = channel_weights
@@ -368,17 +407,17 @@ def run_pipeline(
                 "path_sim", "tfidf_cosine", "emb_cosine", "score"]
         return scored.select(*[c for c in keep if c in scored.columns])
 
-    # persist: scored (the edge table when pruned, every pair otherwise)
-    # feeds both the metrics count and the CC edge input — without it the
-    # whole scoring stage executes twice. `edges` stays a filter at τ: with
-    # repair_outliers the table holds pairs down to repair_min_score.
+    # scored (the edge table when pruned, every pair otherwise) is a leaf:
+    # it feeds the metrics count and the CC edge input, and the scoring
+    # plan runs once. `edges` stays a filter at τ: with repair_outliers
+    # the table holds pairs down to repair_min_score.
     _label("stage2 scoring")
-    scored = ck.stage("scored", build_scored) if ck else build_scored().persist()
+    scored = ck.stage("scored", build_scored) if ck else build_scored().localCheckpoint(eager=True)
     if adaptive:
         edges = scoring.adaptive_threshold(scored, base=threshold)
     else:
         edges = scored.where(F.col("score") >= threshold)
-    n_scored = scored.count()
+    n_scored = leaf_rows(scored)
     for _df in _scoring_hold:
         _df.unpersist()
     metrics["pairs_scored"] = n_pairs
@@ -401,7 +440,7 @@ def run_pipeline(
         return PipelineResult(labels=labels, metrics=metrics)
 
     # ---- stage 3: transitive clustering --------------------------------------
-    vertices = members.select("id", "block_key", "content_sha")
+    vertices = members.selectExpr("id", "block_key", "content_sha")
 
     if clusterer in ("ghac", "spectral"):
         # per-block exact solvers — GHAC (average-linkage + modularity-k
@@ -471,7 +510,7 @@ def run_pipeline(
 
     _label("stage3 cc")
     cc = connected_components(
-        vertices.select("id"), edges.select("id_a", "id_b"), checkpointer=ck,
+        vertices.selectExpr("id"), edges.selectExpr("id_a", "id_b"), checkpointer=ck,
         n_vertices=n_members,
     )
     metrics["cc_iterations"] = cc.iterations
@@ -482,7 +521,9 @@ def run_pipeline(
             ck.log_metric(stage="cc", **row)
         ck.flush_metrics()
 
-    labels = vertices.join(cc.labels, "id").select("block_key", "id", "component", "content_sha")
+    labels = vertices.join(cc.labels, "id").selectExpr(
+        "block_key", "id", "component", "content_sha"
+    )
     if repair_outliers:
         labels = _repair(
             labels, scored, threshold if repair_min_score is None else repair_min_score

@@ -7,6 +7,7 @@
 
 import itertools
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -89,6 +90,80 @@ def test_normalize_schema(spark, fixture_dfs):
     assert expect <= set(norm.columns)
     row = norm.where(F.size("tokens") > 0).first()
     assert row.tokens == sorted(set(row.tokens))
+
+
+def test_normalize_arrays_are_sorted_sets(spark, fixture_dfs):
+    """tokens and shingles come out of sort_array: on every fixture row
+    they are ascending and distinct, and equal what array_sort makes of
+    the same unsorted arrays (both hold non-NULL longs)."""
+    from jmdfane_spark.functions import text as T
+
+    files, _, _ = fixture_dfs
+    ref = files.selectExpr(
+        "concat_ws(':', repo, path, `commit`) AS id",
+        f"transform({T.tokenize_sql('content')}, x -> xxhash64(x)) AS _th",
+    ).selectExpr(
+        "id",
+        "array_sort(array_distinct(_th)) AS tokens",
+        f"array_sort({T.hashed_word_ngrams_sql('_th', 3)}) AS shingles",
+    )
+    want = {r.id: (r.tokens, r.shingles) for r in ref.collect()}
+    got = {r.id: (r.tokens, r.shingles) for r in normalize_files(files).collect()}
+    assert got == want
+    assert any(len(s) > 1 for _, s in got.values())
+    for tokens, shingles in got.values():
+        assert tokens == sorted(set(tokens))
+        assert shingles == sorted(set(shingles))
+
+
+def test_tfidf_features_match_python_reference(spark, fixture_dfs):
+    """tfidf_features against a Python TF-IDF over the collected tokens,
+    in both TF modes: deduplicated hashed tokens (distinct_tokens=True, as
+    the pipeline calls it) and raw string tokens with repeats. IDF is
+    ln(N / df + 1); colliding buckets are summed; idx ascending."""
+    import math
+    from collections import Counter
+
+    from jmdfane_spark.functions import text as T
+    from jmdfane_spark.operators import scoring
+
+    files, _, _ = fixture_dfs
+    hashed = normalize_files(files).selectExpr("id", "tokens AS toks")
+    raw = files.selectExpr(
+        "concat_ws(':', repo, path, `commit`) AS id", f"{T.tokenize_sql('content')} AS toks"
+    )
+    for docs, distinct in ((hashed, True), (raw, False)):
+        rows = docs.collect()
+        idx = dict(
+            docs.selectExpr("explode(toks) AS t").distinct().selectExpr(
+                "t", f"pmod(xxhash64(t), {scoring.TFIDF_DIM})"
+            ).collect()
+        )
+        n = len(rows)
+        df = Counter(t for r in rows for t in set(r.toks))
+        want = {}
+        for r in rows:
+            buckets: dict = {}
+            for t, tf in Counter(r.toks).items():
+                v = float(np.float32(tf * math.log(n / df[t] + 1.0)))
+                buckets[idx[t]] = buckets.get(idx[t], 0.0) + v
+            keys = sorted(buckets)
+            vals = [float(np.float32(buckets[k])) for k in keys]
+            if keys:
+                want[r.id] = (keys, vals, math.sqrt(sum(v * v for v in vals)))
+        got = {
+            r.id: (r.tfidf_idx, r.tfidf_val, r.tfidf_norm, r.tfidf_map)
+            for r in scoring.tfidf_features(
+                docs, "id", "toks", distinct_tokens=distinct
+            ).collect()
+        }
+        assert set(got) == set(want), distinct
+        for i, (keys, vals, norm) in want.items():
+            g_idx, g_val, g_norm, g_map = got[i]
+            assert g_idx == keys, (distinct, i)
+            assert g_val == pytest.approx(vals, rel=1e-6), (distinct, i)
+            assert g_norm == pytest.approx(norm, rel=1e-9), (distinct, i)
+            assert g_map == dict(zip(g_idx, g_val))
 
 
 def test_flagship_f1_with_spectral_clusterer(spark, fixture_dfs):
@@ -322,37 +397,42 @@ def test_warm_rerun_compiles_no_classes(spark, hot_files):
 def test_warm_rerun_job_budget(spark, hot_files):
     """A warm batch op (run_pipeline + labels.count()) on the hot-block
     fixture runs at most JOB_BUDGET Spark jobs: the blocking pre-pass is
-    one action that also fills the members cache, and the payload
-    broadcast gate reads the cache's statistics instead of sampling. A
-    separate members count, block-count table, pair-estimate collect and
-    sampled gate took the op to 40."""
-    JOB_BUDGET = 32
+    one action, the payload broadcast gate reads the members leaf's
+    stored size instead of sampling, and the pair and edge counts are RDD
+    jobs over their leaves. A separate members count, block-count table,
+    pair-estimate collect and sampled gate took the op to 40; persisted
+    intermediates counted by df.count() and a two-shuffle TF-IDF regroup
+    to 32."""
+    JOB_BUDGET = 27
     _run_once(spark, hot_files, **_HOT_KW)
     _, _, jobs = _run_once(spark, hot_files, **_HOT_KW)
     assert jobs <= JOB_BUDGET, jobs
 
 
 def test_payload_broadcast_gate_reads_cache_stats(spark, hot_files, monkeypatch):
-    """Once the blocking pre-pass has run, the members cache is loaded:
-    its plan statistics report rowCount == the member count. The gate
-    forces the payload broadcast on the fixture and does not when
-    BROADCAST_BYTE_CAP is below the cached size (with Spark's own
-    broadcast threshold off, so the join is shuffled); pairs, edges and
-    labels are identical both ways."""
+    """The gate reads the members leaf's size from the block manager's
+    storage info (memory + disk of the leaf's RDD), not the leaf's plan
+    statistics, which are those of the plan it was cut from (an estimate
+    unless that plan is a filled cache). The gate forces the payload
+    broadcast on the fixture and does not when BROADCAST_BYTE_CAP is below
+    the stored size (with Spark's own broadcast threshold off, so the join
+    is shuffled); pairs, edges and labels are identical both ways."""
     from jmdfane_spark.operators import pairs as pairs_mod
     from jmdfane_spark.operators import scoring
     from jmdfane_spark.plans import pipeline
 
     seen: dict = {}
-    real_stats, real_bytes, real_score = pipeline.block_stats, pipeline.cached_bytes, scoring.score_pairs
+    real_stats, real_score = pipeline.block_stats, scoring.score_pairs
+    real_bytes = pipeline.stored_bytes
 
     def spy_stats(*a, **k):
         seen["stats"] = real_stats(*a, **k)
         return seen["stats"]
 
     def spy_bytes(df):
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        seen["rows"] = int(stats.rowCount().get())
+        rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+        info = {i.id(): i for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}[rdd_id]
+        seen["stored"] = info.memSize() + info.diskSize()
         seen["bytes"] = real_bytes(df)
         return seen["bytes"]
 
@@ -364,21 +444,55 @@ def test_payload_broadcast_gate_reads_cache_stats(spark, hot_files, monkeypatch)
         return out
 
     monkeypatch.setattr(pipeline, "block_stats", spy_stats)
-    monkeypatch.setattr(pipeline, "cached_bytes", spy_bytes)
+    monkeypatch.setattr(pipeline, "stored_bytes", spy_bytes)
     monkeypatch.setattr(scoring, "score_pairs", spy_score)
 
     runs, threshold = {}, "spark.sql.autoBroadcastJoinThreshold"
     before = spark.conf.get(threshold)
     for name in ("broadcast", "shuffled"):
         if name == "shuffled":
-            monkeypatch.setattr(pairs_mod, "BROADCAST_BYTE_CAP", seen["bytes"] * 2 - 1)
+            # the stored size is an estimate of the objects held, which may
+            # move a little between runs: a cap of one copy's size keeps
+            # two copies over it
+            monkeypatch.setattr(pairs_mod, "BROADCAST_BYTE_CAP", seen["bytes"])
             spark.conf.set(threshold, "-1")
         try:
             metrics, part, _ = _run_once(spark, hot_files, **_HOT_KW)
         finally:
             spark.conf.set(threshold, before)
-        assert seen["rows"] == seen["stats"].rows == 340, (seen["rows"], seen["stats"])
+        assert seen["stats"].rows == 340, seen["stats"]
+        assert seen["bytes"] == seen["stored"] > 0, seen
         runs[name] = (seen["pairs"], seen["edges"], metrics["edges"], part)
         seen[name] = seen["plan"].count("rightHint=(strategy=broadcast)")
     assert seen["broadcast"] == 2 and seen["shuffled"] == 0, seen
     assert runs["broadcast"] == runs["shuffled"]
+
+
+def test_warm_op_plans_read_leaves(spark, hot_files):
+    """After the stage-0 pre-pass no SQL execution of a warm batch op
+    reads an InMemoryRelation: the pairs and scoring tables are leaves
+    (LogicalRDD) like the members table. Spark renders an execution's
+    whole physical plan as text at its start and at every AQE update, a
+    persisted frame's plan nested in full into each query that reads it;
+    with persisted intermediates this op rendered ~0.8 MB of final plan
+    text over 8 executions, with leaves ~62 KB."""
+    PLAN_KB_BUDGET = 100
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        return sorted(conv.asJava(store.executionsList()), key=lambda e: e.executionId())
+
+    _run_once(spark, hot_files, **_HOT_KW)
+    last = max((e.executionId() for e in executions()), default=-1)
+    _run_once(spark, hot_files, **_HOT_KW)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    op = [(e.description(), e.physicalPlanDescription()) for e in executions()
+          if e.executionId() > last]
+    stage0 = [k for k, (desc, _) in enumerate(op) if "stage0" in desc]
+    assert stage0, [d for d, _ in op]
+    later = op[stage0[-1] + 1:]
+    assert len(later) >= 4, [d for d, _ in op]
+    assert not [d for d, text in later if "InMemoryRelation" in text]
+    kb = sum(len(text) for _, text in op) / 1024
+    assert kb <= PLAN_KB_BUDGET, kb
